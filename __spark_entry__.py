@@ -8128,8 +8128,9 @@ def budget_allocation_q(spark, sf_dir):
 # measured FPR on a disjoint fresh set under the configured
 # bits_per_key=12 bound (theoretical ~0.3%; gate at 2%). Builds a real
 # segment store in a temp dir (eager Spark build job, same applyInPandas
-# path the engine runs per epoch) and probes both sets. Counts are
-# oracle-checked; the two flags are the gate.
+# path the engine runs per epoch) and probes both sets through the bloom
+# pre-filter the exact probe runs. The result is collected before the temp
+# dir is removed. Counts are oracle-checked; the two flags are the gate.
 @_q(
     "bloom_fpr_gate",
     """
@@ -8140,6 +8141,7 @@ def budget_allocation_q(spark, sf_dir):
     """,
 )
 def bloom_fpr_gate_q(spark, sf_dir):
+    import shutil
     import tempfile
 
     from etherscan_contract_crawler_spark.operators.bloom import SegmentStore
@@ -8160,24 +8162,28 @@ def bloom_fpr_gate_q(spark, sf_dir):
         )
 
     seen, fresh = keyed("s"), keyed("f")
-    store = SegmentStore(
-        tempfile.mkdtemp(prefix="bloom_gate_"), n_buckets=8, bits_per_key=12
-    )
-    store.build(seen, version=1)
-    ps = store.probe(seen, 1).agg(
-        F.count("*").cast("long").alias("n_seen"),
-        F.sum((~F.col("bloom_maybe")).cast("long")).alias("_fn"),
-    )
-    pf = store.probe(fresh, 1).agg(
-        F.count("*").cast("long").alias("n_fresh"),
-        F.sum(F.col("bloom_maybe").cast("long")).alias("_fp"),
-    )
-    return ps.crossJoin(F.broadcast(pf)).select(
-        "n_seen",
-        "n_fresh",
-        (F.col("_fn") == 0).alias("no_false_negatives"),
-        (F.col("_fp") * 50 <= F.col("n_fresh")).alias("fpr_le_2pct"),
-    )
+    root = tempfile.mkdtemp(prefix="bloom_gate_")
+    try:
+        store = SegmentStore(root, n_buckets=8, bits_per_key=12)
+        store.build(seen, version=1)
+        ps = store.probe(seen, 1).agg(
+            F.count("*").cast("long").alias("n_seen"),
+            F.sum((~F.col("bloom_maybe")).cast("long")).alias("_fn"),
+        )
+        pf = store.probe(fresh, 1).agg(
+            F.count("*").cast("long").alias("n_fresh"),
+            F.sum(F.col("bloom_maybe").cast("long")).alias("_fp"),
+        )
+        out = ps.crossJoin(F.broadcast(pf)).select(
+            "n_seen",
+            "n_fresh",
+            (F.col("_fn") == 0).alias("no_false_negatives"),
+            (F.col("_fp") * 50 <= F.col("n_fresh")).alias("fpr_le_2pct"),
+        )
+        rows = out.collect()
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
+    return spark.createDataFrame(rows, out.schema)
 
 
 # Per-domain crawl sessions (streaming/lateness.py crawl_sessions):

@@ -2,7 +2,7 @@
 
 One epoch = one deterministic, resumable unit:
 
-    frontier ──anti-join(url_seen, bloom/cuckoo pre-filter)──► pending
+    frontier ──exact dedup (segment store probe or anti-join)──► pending
     pending  ──robots ∧ budgets ∧ politeness windows──────────► scheduled batch
     scheduled ──ONE job: mapInPandas fetch (injected fetcher)
                 + inline decode/PSNR/caption validation
@@ -51,6 +51,10 @@ DEAD_LETTER_DDL = (
     "url_sha1 string, url string, domain string, domain_hash int, attempts int, failed_epoch int"
 )
 
+#: dedup cost gate: the segment-store probe replaces the url_seen anti-join
+#: once seen outgrows the frontier by this factor (CrawlEngine.pending)
+STORE_DEDUP_SEEN_RATIO = 8
+
 
 @dataclass
 class EngineConfig:
@@ -61,7 +65,6 @@ class EngineConfig:
     use_bloom: bool = True
     expand_links: bool = False
     max_retries: int = 3
-    n_salts: int = 8
     bloom_bits_per_key: int = 12
     #: bloom sub-segment sizing: per-task memory and probe parallelism are
     #: governed by this, not by n_buckets (scale-aware segmentation — at
@@ -70,12 +73,6 @@ class EngineConfig:
     #: metadata-table compaction/expiry cadence (epochs); bounds manifest and
     #: data-dir accretion (Iceberg rewrite_data_files/expire_snapshots analog)
     compact_every: int = 16
-    #: dedup plan: "auto" = cost gate (join while seen ≲ frontier, store in
-    #: steady state), "store" / "join" force one side (tests, ops overrides)
-    dedup_plan: str = "auto"
-    #: schedule plan: "fused" = single admission window (WindowGroupLimit
-    #: skew guard, r3); "salted" = the r2 two-phase windows (comparison)
-    schedule_plan: str = "fused"
     extra: dict = field(default_factory=dict)
 
 
@@ -150,9 +147,7 @@ class CrawlEngine:
         v = self._bloom_version()
         expected = self.last_completed_epoch() + 1
         store = self.segments if (self.cfg.use_bloom and v == expected and v is not None) else None
-        if store is not None and self.cfg.dedup_plan == "join":
-            store = None
-        elif store is not None and self.cfg.dedup_plan == "auto":
+        if store is not None:
             # cost gate (both answers are exact — this only picks the plan):
             # the store probe pays an Arrow-into-Python tax per CANDIDATE;
             # the anti-join pays a scan/shuffle over the whole SEEN side.
@@ -162,7 +157,7 @@ class CrawlEngine:
             # Counts come from parquet footers — no job.
             seen_total = self.url_seen.row_count()
             cand_total = max(1, self.frontier.row_count())
-            if seen_total < 8 * cand_total:
+            if seen_total < STORE_DEDUP_SEEN_RATIO * cand_total:
                 store = None
         # frontier appends (expansion) can re-discover a known URL under a new
         # priority — collapse duplicates with the same max-priority/min-url
@@ -225,9 +220,7 @@ class CrawlEngine:
             robots=self.robots,
             epoch_duration_s=cfg.epoch_duration_s,
             batch_size=cfg.batch_size,
-            n_salts=cfg.n_salts,
             max_capacity=self._max_capacity,
-            plan=cfg.schedule_plan,
             topk_state=self._topk_state,
             defer_cap=True,
         ).cache()

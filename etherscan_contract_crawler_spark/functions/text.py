@@ -20,11 +20,6 @@ def to_path_name(col: Column | str, max_len: int = 255) -> Column:
     return F.substring(F.regexp_replace(_c(col), r"[^a-zA-Z0-9\-_\.]", "_"), 1, max_len)
 
 
-def canonical_lower(col: Column | str) -> Column:
-    """F2 — lowercase canonicalization (contract_crawler.py:362, :365, :463)."""
-    return F.lower(F.trim(_c(col)))
-
-
 def strip_comments_normalize(col: Column | str) -> Column:
     """F4 — comment/whitespace normalization (solidity-naive-checksum.py:6-10):
     remove ``/*...*/`` (dotall), remove ``//...`` to end-of-line, collapse
@@ -47,12 +42,6 @@ def import_basename(line: Column | str) -> Column:
     return F.regexp_extract(_c(line), r"""['"].*/(\w+\.sol)['"];""", 1)
 
 
-def seq_file_name(n: Column, total: Column, name: Column) -> Column:
-    """F7 — zero-padded position-tagged file name ``{n:0>2}_{total:0>2}_{name}``
-    (contract_crawler.py:206-207)."""
-    return F.format_string("%02d_%02d_%s", n, total, name)
-
-
 def strip_seq_prefix(fname: Column | str) -> Column:
     """Inverse of F7 used by the import-fix join (fix-imports-solidity.py:31):
     drop the 6-char ``NN_NN_`` prefix."""
@@ -62,19 +51,3 @@ def strip_seq_prefix(fname: Column | str) -> Column:
 def starts_with_digit(col: Column | str) -> Column:
     """P4 — numeric-prefix predicate (contract_crawler.py:48-49, :224)."""
     return F.regexp_like(_c(col), F.lit(r"^\d"))
-
-
-def epoch_manifest_name(ts_col: Column | str = None) -> Column:
-    """F8 — manifest timestamp format (contract_crawler.py:318). The engine
-    passes epoch ids explicitly for determinism; this is the formatting op."""
-    ts = F.current_timestamp() if ts_col is None else _c(ts_col)
-    return F.date_format(ts, "yyyyMMdd_HHmmss")
-
-
-def md5_concat_sorted(name_col: str, body_col: str) -> Column:
-    """A2 — per-group content checksum (solidity-naive-checksum.py:17-34):
-    concatenate normalized bodies and MD5. The reference concatenates in
-    ``os.listdir`` order (unstable — SURVEY.md §8 B5); the engine pins sort
-    order by file name. Use inside ``groupBy(key).agg(...)``."""
-    pair = F.struct(F.col(name_col).alias("n"), F.col(body_col).alias("b"))
-    return F.md5(F.array_join(F.transform(F.array_sort(F.collect_list(pair)), lambda s: s["b"]), ""))

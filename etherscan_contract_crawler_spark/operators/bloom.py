@@ -1,4 +1,4 @@
-"""Segmented URL-seen membership store: bloom + cuckoo + sorted key runs
+"""Segmented URL-seen membership store: bloom + exact sorted key runs
 (SURVEY.md §4, M3; LSM layout added in round 2).
 
 Why segmented: at the 10^10-key target a single Bloom filter is ~11.2 GiB of
@@ -19,7 +19,7 @@ epoch, and exact dedup still needed a Spark anti-join that SCANS the whole
 url_seen table every epoch — the last O(total)-per-epoch costs in the
 engine. Now a segment is:
 
-    seg{b}_{s}.npz        — immutable BASE: bloom bitmap + cuckoo + n
+    seg{b}_{s}.npz        — immutable BASE: bloom bitmap + n
     seg{b}_{s}.keys.npy   — immutable sorted 20-byte digests (mmap-able)
     seg{b}_{s}.r{j}.npz   — delta RUN j: its own small bloom + n
     seg{b}_{s}.r{j}.keys.npy — run j's sorted digests
@@ -48,11 +48,13 @@ rename makes it live; a crash mid-build leaves no partial version that
 ``versions()`` could mistake for complete (the engine's staleness guard then
 degrades to the exact Spark anti-join, which is always correct).
 
-Guarantees (property-tested): bloom/cuckoo have NO false negatives; the
-exact key runs have NO false positives and NO false negatives — the store's
-exact mode IS the dedup answer, not a pre-filter. Legacy (non-exact) mode
-remains for stale-version fallback, where a false positive only costs an
-extra probe in the Spark anti-join backstop.
+Guarantees (property-tested): the bloom has NO false negatives; the exact
+key runs have NO false positives and NO false negatives — the exact probe
+IS the dedup answer. The blooms are only its pre-filter: at 12 bits/key
+with 2x headroom and k=7 each passes ~6e-5 of fresh keys on to the binary
+search (a segment ORs its base's and ≤MAX_RUNS runs' blooms), so no
+second-stage filter (e.g. a cuckoo table) in front of the key runs could
+save a measurable share of searches.
 
 Hashing: url_sha1 is already a uniform 160-bit digest; h1/h2 are its first
 two 64-bit words, bit_i = (h1 + i*h2) mod m (standard double hashing); the
@@ -76,8 +78,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-_FP_MULT = np.uint64(0x5BD1E995)
 
 
 def _h1h2(sha1_hex: pd.Series) -> tuple[np.ndarray, np.ndarray]:
@@ -259,17 +259,10 @@ class SegmentStore:
         return {
             "n_sub": {int(k): int(v) for k, v in raw["n_sub"].items()},
             "n_keys": {int(k): int(v) for k, v in raw["n_keys"].items()},
-            "exact": bool(raw.get("exact", False)),
             # segment key "{bucket}_{sub}" -> {base, n_base, runs, run_ns};
             # file paths are store-root-relative into immutable version dirs
             "segments": raw.get("segments", {}),
         }
-
-    def supports_exact(self, version: int) -> bool:
-        try:
-            return self._meta(version)["exact"]
-        except OSError:
-            return False
 
     def _write_meta(
         self,
@@ -283,7 +276,6 @@ class SegmentStore:
             json.dump(
                 {"n_sub": {str(k): v for k, v in n_sub.items()},
                  "n_keys": {str(k): v for k, v in n_keys.items()},
-                 "exact": True,
                  "segments": segments,
                  "target_keys_per_segment": self.target_keys},
                 f,
@@ -370,14 +362,12 @@ class SegmentStore:
             h1, h2 = _h1h2(pdf["url_sha1"])
             bitmap = np.zeros((m + 7) // 8, dtype=np.uint8)
             _bloom_insert(bitmap, m, k, h1, h2)
-            ck = _CuckooTable.build(h1, h2, headroom=2.0)
             name = base_name(bucket, sub)
             path = os.path.join(build_dir, name)
             # savez appends '.npz' unless the name already ends with it
             tmp = path + f".tmp{os.getpid()}.npz"
             np.savez_compressed(
-                tmp, bitmap=bitmap, m=np.int64(m), k=np.int64(k), n=np.int64(n),
-                ck_table=ck.table, ck_saturated=np.int8(ck.saturated),
+                tmp, bitmap=bitmap, m=np.int64(m), k=np.int64(k), n=np.int64(n)
             )
             os.replace(tmp, path)
             kpath = os.path.join(build_dir, keys_name(name))
@@ -459,25 +449,18 @@ class SegmentStore:
             m, k = _bloom_params(n_new, bits_per_key, n_hashes)
             bitmap = np.zeros((m + 7) // 8, dtype=np.uint8)
             _bloom_insert(bitmap, m, k, h1, h2)
-            if ent is None:
-                # brand-new segment: fresh base from the delta alone
-                name = base_name(bucket, sub)
-                path = os.path.join(build_dir, name)
-                ck = _CuckooTable.build(h1, h2, headroom=2.0)
-                tmp = path + f".tmp{os.getpid()}.npz"
-                np.savez_compressed(
-                    tmp, bitmap=bitmap, m=np.int64(m), k=np.int64(k), n=np.int64(n_new),
-                    ck_table=ck.table, ck_saturated=np.int8(ck.saturated),
-                )
-            else:
-                # run index = len(prev runs): deterministic, so the driver
-                # derives the same name for the manifest without a return trip
-                name = run_name(bucket, sub, len(ent["runs"]))
-                path = os.path.join(build_dir, name)
-                tmp = path + f".tmp{os.getpid()}.npz"
-                np.savez_compressed(
-                    tmp, bitmap=bitmap, m=np.int64(m), k=np.int64(k), n=np.int64(n_new)
-                )
+            # brand-new segment: fresh base from the delta alone; otherwise
+            # run index = len(prev runs): deterministic, so the driver
+            # derives the same name for the manifest without a return trip
+            name = (
+                base_name(bucket, sub) if ent is None
+                else run_name(bucket, sub, len(ent["runs"]))
+            )
+            path = os.path.join(build_dir, name)
+            tmp = path + f".tmp{os.getpid()}.npz"
+            np.savez_compressed(
+                tmp, bitmap=bitmap, m=np.int64(m), k=np.int64(k), n=np.int64(n_new)
+            )
             os.replace(tmp, path)
             kpath = os.path.join(build_dir, keys_name(name))
             np.save(kpath + f".tmp{os.getpid()}.npy", np.sort(_keys20(pdf["url_sha1"])))
@@ -550,14 +533,14 @@ class SegmentStore:
         """Membership probe, grouped by (domain_hash, sub) so each task reads
         one bounded segment's files once.
 
-        exact=False: adds ``bloom_maybe`` — False means DEFINITELY unseen
-        (no false negatives); True still needs an exact backstop.
         exact=True: adds ``seen`` — EXACT membership (bloom short-circuits
         the misses; hits are verified against the mmap'd sorted key runs).
+        exact=False: adds ``bloom_maybe`` — the bloom pre-filter the exact
+        probe runs, on its own: False means DEFINITELY unseen (no false
+        negatives); True goes on to the binary search. Used to measure the
+        pre-filter's false-positive rate.
         """
         meta = self._meta(version)
-        if exact and not meta["exact"]:
-            raise ValueError(f"version {version} has no exact key runs")
         root = self.root
         keys_name = self._keys_name
         out_col = "seen" if exact else "bloom_maybe"
@@ -577,9 +560,6 @@ class SegmentStore:
             h1, h2 = _h1h2(pdf["url_sha1"])
             seg = np.load(base_path)
             base_maybe = _bloom_test(seg["bitmap"], np.uint64(int(seg["m"])), int(seg["k"]), h1, h2)
-            if not exact and not bool(seg["ck_saturated"]):
-                ck = _CuckooTable(seg["ck_table"], saturated=False)
-                base_maybe &= ck.contains(h1, h2)
             run_paths = [os.path.join(root, *r.split("/")) for r in ent["runs"]]
             maybe = base_maybe.copy()
             run_maybes = []
@@ -619,135 +599,3 @@ class SegmentStore:
             .drop("_sub")
         )
 
-
-class _CuckooTable:
-    """Minimal cuckoo filter: 4-slot buckets, 16-bit fingerprints.
-
-    Refines bloom positives in the store's LEGACY (non-exact) mode to cut
-    false positives before the Spark anti-join backstop (north_star's
-    "cuckoo-filter refinement"; cf. PAPERS.md learned-cuckoo entry). Never
-    produces a false negative: if any insert fails after max kicks the table
-    is marked saturated and the probe stage skips it. The exact key runs
-    supersede it when present.
-
-    ``insert_many`` is bulk-vectorized (r1 VERDICT top item): keys are placed
-    with numpy group-rank scatters — two passes over (i1, i2) each — and only
-    the residue whose both buckets filled (<1% at 0.84 load) falls back to
-    the per-key eviction loop.
-    """
-
-    SLOTS = 4
-    MAX_KICKS = 500
-
-    def __init__(self, table: np.ndarray, saturated: bool):
-        self.table = table
-        self.saturated = saturated
-
-    @staticmethod
-    def _fp_and_buckets(h1: np.ndarray, h2: np.ndarray, nb: np.uint64):
-        fp = (h2 % np.uint64(65535)).astype(np.uint64) + np.uint64(1)
-        i1 = h1 % nb
-        i2 = (i1 ^ (fp * _FP_MULT)) % nb
-        return fp.astype(np.uint16), i1.astype(np.int64), i2.astype(np.int64)
-
-    @classmethod
-    def build(cls, h1: np.ndarray, h2: np.ndarray, headroom: float = 1.0) -> "_CuckooTable":
-        n = len(h1)
-        nb = max(8, 1 << int(np.ceil(np.log2(max(1, int(n * headroom)) / cls.SLOTS / 0.84 + 1))))
-        table = np.zeros((nb, cls.SLOTS), dtype=np.uint16)
-        t = cls(table, saturated=False)
-        t.insert_many(h1, h2)
-        return t
-
-    def insert_many(self, h1: np.ndarray, h2: np.ndarray) -> None:
-        """Vectorized bulk insert. Marks the table saturated — never a false
-        negative — when the slow-path eviction chain exhausts MAX_KICKS."""
-        if self.saturated or not len(h1):
-            return
-        table = self.table
-        nb = table.shape[0]
-        fp, i1, i2 = self._fp_and_buckets(h1, h2, np.uint64(nb))
-        # skip keys already present (same check contains() applies)
-        present = (table[i1] == fp[:, None]).any(axis=1) | (
-            table[i2] == fp[:, None]
-        ).any(axis=1)
-        if present.any():
-            keep = ~present
-            fp, i1, i2 = fp[keep], i1[keep], i2[keep]
-        # drop intra-batch duplicates: same fingerprint + same bucket pair is
-        # one membership witness (the pair is orderless: i2 = f(i1, fp))
-        lo, hi = np.minimum(i1, i2), np.maximum(i1, i2)
-        _, uidx = np.unique(
-            np.stack([fp.astype(np.int64), lo, hi]), axis=1, return_index=True
-        )
-        if len(uidx) < len(fp):
-            uidx.sort()
-            fp, i1, i2 = fp[uidx], i1[uidx], i2[uidx]
-        pending = np.ones(len(fp), dtype=bool)
-        for buckets in (i1, i2, i1, i2):
-            if not pending.any():
-                break
-            idx = np.flatnonzero(pending)
-            b = buckets[idx]
-            touched = np.unique(b)
-            # compact occupied slots to the left (slot order is meaningless)
-            rows = table[touched]
-            order = np.argsort(rows == 0, axis=1, kind="stable")
-            rows = np.take_along_axis(rows, order, axis=1)
-            table[touched] = rows
-            occ = (rows != 0).sum(axis=1)
-            # group-rank each key within its bucket, place at occ + rank
-            so = np.argsort(b, kind="stable")
-            bs = b[so]
-            rank = np.arange(len(bs)) - np.searchsorted(bs, bs, side="left")
-            slot = occ[np.searchsorted(touched, bs)] + rank
-            ok = slot < self.SLOTS
-            table[bs[ok], slot[ok]] = fp[idx[so[ok]]]
-            pending[idx[so[ok]]] = False
-        if pending.any():
-            self._insert_evict(fp[pending], i1[pending], i2[pending])
-
-    def _insert_evict(self, fp: np.ndarray, i1: np.ndarray, i2: np.ndarray) -> None:
-        """Per-key eviction fallback for the rare both-buckets-full residue."""
-        cls = type(self)
-        table = self.table
-        nb = table.shape[0]
-        rng = np.random.default_rng(12345)  # deterministic eviction choices
-        saturated = self.saturated
-        mult, mask = int(_FP_MULT), nb - 1
-        for j in range(len(fp)):
-            f, a, b = int(fp[j]), int(i1[j]), int(i2[j])
-            if f in table[a] or f in table[b]:
-                continue
-            placed = False
-            for idx in (a, b):
-                empt = np.where(table[idx] == 0)[0]
-                if len(empt):
-                    table[idx, empt[0]] = f
-                    placed = True
-                    break
-            if placed:
-                continue
-            cur, fcur = a, f
-            for _ in range(cls.MAX_KICKS):
-                slot = int(rng.integers(0, cls.SLOTS))
-                fcur, table[cur, slot] = int(table[cur, slot]), fcur
-                # fp*mult < 2^48 so the Python-int product matches the
-                # non-wrapping uint64 product used in _fp_and_buckets
-                cur = (cur ^ (fcur * mult)) & mask
-                empt = np.where(table[cur] == 0)[0]
-                if len(empt):
-                    table[cur, empt[0]] = fcur
-                    placed = True
-                    break
-            if not placed:
-                saturated = True
-                break
-        self.saturated = saturated
-
-    def contains(self, h1: np.ndarray, h2: np.ndarray) -> np.ndarray:
-        nb = np.uint64(self.table.shape[0])
-        fp, i1, i2 = self._fp_and_buckets(h1, h2, nb)
-        in1 = (self.table[i1] == fp[:, None]).any(axis=1)
-        in2 = (self.table[i2] == fp[:, None]).any(axis=1)
-        return in1 | in2

@@ -7,9 +7,9 @@ That dedup-before-fetch ordering is the reference's one real optimization
 (SURVEY.md §4 O1); Catalyst cannot reorder across the Python fetch barrier,
 so this module constructs the plan in that order by hand.
 
-Two plans, picked by what the store can prove:
+Two plans, both exact:
 
-EXACT STORE PATH (the 10^10 path — no url_seen scan at all):
+STORE PATH (the 10^10 path — no url_seen scan at all):
   candidates --(grouped probe: bloom short-circuit + binary search over
                mmap'd sorted key runs)--> seen: boolean (EXACT)
   unseen = filter(~seen). The url_seen TABLE is never joined — the per-epoch
@@ -18,13 +18,9 @@ EXACT STORE PATH (the 10^10 path — no url_seen scan at all):
   anti-join must scan/build over the whole seen side every epoch no matter
   how good the pre-filter is.
 
-LEGACY / FALLBACK PATH (store missing, stale after a crash, or pre-exact
-version):
-  candidates --(bloom/cuckoo probe)--> split
-     bloom_maybe = False  -> DEFINITELY new (skips the join entirely)
-     bloom_maybe = True   -> exact left_anti join vs url_seen (sort-merge at
-                             scale; both sides pre-bucketed by domain_hash)
-  union of the two = unseen frontier. Always exact regardless of FPR.
+JOIN PATH (no usable store version — missing, or stale after a crash):
+  exact left_anti join of the candidates against url_seen (sort-merge at
+  scale; both sides pre-bucketed by domain_hash).
 """
 
 from __future__ import annotations
@@ -51,25 +47,20 @@ def unseen_with_bloom(
     """Store-accelerated J1 (falls back to the exact join when it must)."""
     if store is None or version is None or version not in store.versions():
         return anti_join_seen(candidates, seen)
-    cols = candidates.columns  # probe's dim join moves the key column first
-    if store.supports_exact(version):
-        # probe a 2-column PROJECTION, not the full rows: the probe's cost is
-        # dominated by the Arrow round trip into Python (measured ~0.3 ms/row
-        # single-core for 10-column frontier rows), and only the key columns
-        # participate. The discovered seen-keys set is bounded by the
-        # CANDIDATE count — so the anti-join that re-applies it to the full
-        # rows never touches the url_seen table and stays independent of
-        # total-seen size (AQE broadcasts it when small).
-        seen_keys = (
-            store.probe(candidates.select("url_sha1", "domain_hash"), version, exact=True)
-            .filter(F.col("seen"))
-            .select("url_sha1")
-        )
-        return candidates.join(seen_keys, "url_sha1", "left_anti").select(cols)
-    probed = store.probe(candidates, version)
-    definitely_new = probed.filter(~probed.bloom_maybe).drop("bloom_maybe")
-    maybe_seen = probed.filter(probed.bloom_maybe).drop("bloom_maybe")
-    return definitely_new.unionByName(anti_join_seen(maybe_seen, seen)).select(cols)
+    cols = candidates.columns  # the USING join moves the key column first
+    # probe a 2-column PROJECTION, not the full rows: the probe's cost is
+    # dominated by the Arrow round trip into Python (measured ~0.3 ms/row
+    # single-core for 10-column frontier rows), and only the key columns
+    # participate. The discovered seen-keys set is bounded by the
+    # CANDIDATE count — so the anti-join that re-applies it to the full
+    # rows never touches the url_seen table and stays independent of
+    # total-seen size (AQE broadcasts it when small).
+    seen_keys = (
+        store.probe(candidates.select("url_sha1", "domain_hash"), version, exact=True)
+        .filter(F.col("seen"))
+        .select("url_sha1")
+    )
+    return candidates.join(seen_keys, "url_sha1", "left_anti").select(cols)
 
 
 def url_alias_groups(

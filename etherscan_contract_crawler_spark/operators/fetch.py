@@ -49,6 +49,9 @@ FETCH_RESULT_DDL = (
     + ", valid boolean"
 )
 
+#: fetch_batch emits payload rows in chunks of this many rows (see there)
+EMIT_ROWS = 256
+
 FetchFn = Callable[[str, str, int], dict | None]
 """(url_canon, url_sha1, attempt) -> payload dict (input_hint fields) or None."""
 
@@ -71,7 +74,6 @@ def fetch_batch(
     scheduled: DataFrame,
     fetch_session_factory: Callable[[], FetchFn] = synthetic_fetch_session,
     max_retries: int = 3,
-    validate_inline: bool = True,
 ) -> DataFrame:
     """Run the fetch stage; returns one full row per attempted URL (ok or
     failed), payload columns null on failure.
@@ -83,8 +85,8 @@ def fetch_batch(
     scheduled.count() wave), which is sound only under this invariant;
     ``EngineConfig.extra['debug_reconcile']`` re-checks it per epoch.
 
-    ``validate_inline=True`` fuses U4 payload validation (decode + PSNR +
-    caption/phash vs the deterministic reference) into the same Arrow pass —
+    U4 payload validation (decode + PSNR + caption/phash vs the
+    deterministic reference) is fused into the same Arrow pass —
     the payload bytes are already in hand, so a second mapInPandas stage over
     the binary column (plus its shuffle and semi-join) would double the
     heaviest data movement of the epoch for nothing. The standalone
@@ -96,8 +98,6 @@ def fetch_batch(
         "priority", "depth", "scheduled_offset_s",
     ]
 
-    import os as _os_emit
-
     # Emit in SMALL chunks, not one batch-sized lump: a 10k-row input batch
     # holds every fetched payload (~hundreds of MB) in Python lists before a
     # single byte reaches the JVM, so the Arrow hop and the parquet writer
@@ -105,10 +105,9 @@ def fetch_batch(
     # batch converts — lumpy allocations on BOTH sides of the boundary.
     # Chunked yields stream payloads into the concurrent output writers
     # (crawl.py's landing write) while the NEXT chunk fetches, and bound
-    # per-worker buffered payload to chunk_rows x payload_size.
-    emit_rows = max(
-        16, int(_os_emit.environ.get("SPARK_GRAFT_FETCH_EMIT_ROWS", "256"))
-    )
+    # per-worker buffered payload to EMIT_ROWS x payload_size. Read at call
+    # time, not inside the worker, so the closure carries the value.
+    emit_rows = EMIT_ROWS
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from .validate import validate_payload_row
@@ -133,7 +132,7 @@ def fetch_batch(
                 p = payload or {}
                 if payload is None:
                     valid = False
-                elif validate_inline and p.get("bytes"):
+                elif p.get("bytes"):
                     valid = validate_payload_row(p)
                 else:
                     valid = True
@@ -169,13 +168,8 @@ def fetch_batch(
     # there is little tail to amortize and extra tasks are pure per-task
     # overhead (measured ~7% at local[1]). Same rule at cluster scale:
     # thousands of slots always want 3-4x task granularity.
-    import os as _os
-
-    _default = 4 if scheduled.sparkSession.sparkContext.defaultParallelism >= 16 else 2
-    _factor = max(
-        1, int(_os.environ.get("SPARK_GRAFT_FETCH_PARTS_FACTOR", str(_default)))
-    )
-    n_parts = scheduled.sparkSession.sparkContext.defaultParallelism * _factor
+    parallelism = scheduled.sparkSession.sparkContext.defaultParallelism
+    n_parts = parallelism * (4 if parallelism >= 16 else 2)
     return (
         scheduled.select(*cols, "fetch_slot")
         .repartition(n_parts, "domain_hash", "fetch_slot")

@@ -11,17 +11,13 @@ Reference semantics re-expressed:
     sleeps in the plan; the fetcher honors the offsets.
 
 Skew: a hot domain makes ``Window.partitionBy(domain)`` a single giant
-partition. Round 2 guarded this with a salted pre-rank window (rank within
-(domain, salt), keep local rank <= capacity — lossless) before the exact
-window: two full shuffles of the pending set. Round 3 fuses them into ONE
-window (r2 VERDICT #1): the filter carries a LITERAL rank bound
+partition. The admission filter carries a LITERAL rank bound
 (``rn <= max_capacity``) alongside the per-row ``rn <= capacity``, which
 Catalyst rewrites into a map-side partial ``WindowGroupLimit`` BEFORE the
 exchange — every map task forwards at most max_capacity rows per domain, so
 the reduce-side partition for a hot domain is bounded by
-``max_capacity * n_map_partitions`` regardless of input skew. Same guard the
-salting bought, zero extra shuffle. The salted two-phase plan survives as
-``plan="salted"`` for comparison. (Verified in tests: the physical plan must
+``max_capacity * n_map_partitions`` regardless of input skew, with one
+shuffle of the pending set. (Verified in tests: the physical plan must
 contain a Partial WindowGroupLimit below the Exchange.)
 """
 
@@ -187,9 +183,7 @@ def schedule_epoch(
     robots: DataFrame | None = None,
     epoch_duration_s: int = 60,
     batch_size: int | None = None,
-    n_salts: int = 8,
     max_capacity: int | None = None,
-    plan: str = "fused",
     topk_state: dict | None = None,
     defer_cap: bool = False,
 ) -> DataFrame:
@@ -199,10 +193,8 @@ def schedule_epoch(
     Admission: rn <= max_calls * floor(epoch_duration_s / period_s).
     Global cap: top-``batch_size`` in canonical order via ``global_topk``.
 
-    ``plan="fused"`` (default): one window, skew-guarded by the map-side
-    partial WindowGroupLimit the literal ``rn <= max_capacity`` conjunct
-    unlocks (module doc). ``plan="salted"``: the round-2 two-phase windows
-    (kept for comparison; same results, one extra shuffle).
+    One window, skew-guarded by the map-side partial WindowGroupLimit the
+    literal ``rn <= max_capacity`` conjunct unlocks (module doc).
     ``topk_state``: optional mutable dict reused across epochs so the global
     cap can skip its boundary-sampling job (see ``global_topk``).
     """
@@ -212,28 +204,14 @@ def schedule_epoch(
         "int"
     )
     pending = pending.withColumn("capacity", capacity)
-
-    if plan == "salted":
-        # --- phase 1: salted pre-rank (skew guard, lossless) ---
-        salted = pending.withColumn(
-            "_salt", F.pmod(F.xxhash64("url_sha1"), F.lit(n_salts))
-        )
-        w_local = Window.partitionBy("domain", "_salt").orderBy(*canonical_order())
-        pending = (
-            salted.withColumn("_local_rn", F.row_number().over(w_local))
-            .filter(F.col("_local_rn") <= F.col("capacity"))
-            .drop("_salt", "_local_rn")
-        )
-        rank_filter = F.col("rn") <= F.col("capacity")
-    else:
-        if max_capacity is None:
-            max_capacity = max_epoch_capacity(budgets, epoch_duration_s)
-        # literal conjunct FIRST: Catalyst's InferWindowGroupLimit extracts
-        # the literal bound and plants a Partial WindowGroupLimit below the
-        # exchange; the per-row capacity conjunct stays exact
-        rank_filter = (F.col("rn") <= F.lit(int(max_capacity))) & (
-            F.col("rn") <= F.col("capacity")
-        )
+    if max_capacity is None:
+        max_capacity = max_epoch_capacity(budgets, epoch_duration_s)
+    # literal conjunct FIRST: Catalyst's InferWindowGroupLimit extracts the
+    # literal bound and plants a Partial WindowGroupLimit below the
+    # exchange; the per-row capacity conjunct stays exact
+    rank_filter = (F.col("rn") <= F.lit(int(max_capacity))) & (
+        F.col("rn") <= F.col("capacity")
+    )
 
     w = Window.partitionBy("domain").orderBy(*canonical_order())
     admitted = (
@@ -669,16 +647,15 @@ def rendezvous_assign(
         )
         return (F.array_position(hs, F.array_max(hs)) - 1).cast("int")
 
-    out = domains.select(
-        F.col(domain_col).alias("domain"), slot_for(n_slots).alias("slot")
-    )
-    if prev_slots is not None:
-        out = domains.select(
-            F.col(domain_col).alias("domain"),
-            slot_for(n_slots).alias("slot"),
-            slot_for(prev_slots).alias("prev_slot"),
-        ).withColumn("moved", F.col("slot") != F.col("prev_slot"))
-    return out
+    if prev_slots is None:
+        return domains.select(
+            F.col(domain_col).alias("domain"), slot_for(n_slots).alias("slot")
+        )
+    return domains.select(
+        F.col(domain_col).alias("domain"),
+        slot_for(n_slots).alias("slot"),
+        slot_for(prev_slots).alias("prev_slot"),
+    ).withColumn("moved", F.col("slot") != F.col("prev_slot"))
 
 
 def hamilton_allocate(

@@ -45,12 +45,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # image payloads are binary blobs — keep Arrow batches memory-safe
-        # (SURVEY.md §7 "binary payloads through Arrow"); overridable for
-        # measurement (BASELINE.md §arrow-batch)
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "2048"),
-        )
+        # (SURVEY.md §7 "binary payloads through Arrow"; sweep in
+        # BASELINE.md §arrow-batch)
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
         .config("spark.driver.extraJavaOptions", gc_opts)
         .config("spark.ui.enabled", "false")

@@ -9,7 +9,7 @@ the scan.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions import urls as U
@@ -26,16 +26,6 @@ SEED_CSV_SCHEMA = "block long, tx_hash string, url string, priority double"
 #: Deterministic scheduling origin (the reference has no event time at all;
 #: epochs are logical). Tests/oracles pin this.
 EPOCH0_TS = "2026-01-01 00:00:00"
-
-
-def read_seed_csv(spark: SparkSession, path: str) -> DataFrame:
-    """Read the reference-shaped seed CSV (header ``Block, Transaction Hash,
-    Url, Priority`` — blockchain-multichain-monitor.py:59)."""
-    return (
-        spark.read.option("header", "true")
-        .schema(SEED_CSV_SCHEMA)
-        .csv(path)
-    )
 
 
 def seeds_to_frontier(

@@ -9,7 +9,6 @@ production fetcher and this one share the same ``mapInPandas`` harness
 
 from __future__ import annotations
 
-import csv
 import hashlib
 import io
 
@@ -81,16 +80,6 @@ def gen_seed_rows(
             }
         )
     return rows
-
-
-def write_seed_csv(rows: list[dict], path: str) -> None:
-    """Shape mirrors the reference's seed CSVs / monitor output
-    (blockchain-multichain-monitor.py:59)."""
-    with open(path, "w", newline="") as f:
-        w = csv.writer(f)
-        w.writerow(["Block", "Transaction Hash", "Url", "Priority"])
-        for r in rows:
-            w.writerow([r["block"] or "", r["tx_hash"] or "", r["url"], r["priority"]])
 
 
 def payload_for_key(key_hex: str, encode: bool = True, with_phash: bool = True) -> dict:

@@ -1,33 +1,14 @@
-"""Bloom/cuckoo segment store: no false negatives; probe split correctness."""
+"""Bloom + sorted-key-run segment store: no false negatives; exact probe."""
 
 import numpy as np
-import pandas as pd
 import pytest
 
-from etherscan_contract_crawler_spark.operators.bloom import SegmentStore, _CuckooTable, _h1h2
+from etherscan_contract_crawler_spark.operators.bloom import SegmentStore
 from etherscan_contract_crawler_spark.oracle.reference_oracle import sha1_py
 
 
 def _keys(n, salt=""):
     return [sha1_py(f"k{i}{salt}") for i in range(n)]
-
-
-def test_cuckoo_no_false_negatives():
-    keys = pd.Series(_keys(3000))
-    h1, h2 = _h1h2(keys)
-    ck = _CuckooTable.build(h1, h2)
-    if not ck.saturated:
-        assert ck.contains(h1, h2).all()
-
-
-def test_cuckoo_low_false_positive_rate():
-    ins = pd.Series(_keys(2000))
-    probe = pd.Series(_keys(2000, salt="x"))
-    ck = _CuckooTable.build(*_h1h2(ins))
-    if ck.saturated:
-        pytest.skip("saturated table degrades to bloom-only")
-    fpr = ck.contains(*_h1h2(probe)).mean()
-    assert fpr < 0.05
 
 
 def test_segment_store_no_false_negatives(spark, tmp_path):
@@ -68,27 +49,6 @@ def test_probe_without_segment_marks_all_new(spark, tmp_path):
     )
     probed = store.probe(other_bucket, version=1).collect()
     assert probed[0].bloom_maybe is False
-
-
-def test_cuckoo_vectorized_insert_high_load():
-    """Bulk insert at ~0.84 load forces the eviction fallback for the residue
-    both of whose buckets fill in the vectorized passes — membership must
-    still be exact (no false negatives) unless the table saturates."""
-    keys = pd.Series(_keys(50_000))
-    h1, h2 = _h1h2(keys)
-    ck = _CuckooTable.build(h1, h2, headroom=1.0)
-    if not ck.saturated:
-        assert ck.contains(h1, h2).all()
-
-
-def test_cuckoo_incremental_insert_matches_bulk():
-    h1, h2 = _h1h2(pd.Series(_keys(8_000)))
-    bulk = _CuckooTable.build(h1, h2, headroom=2.0)
-    inc = _CuckooTable(np.zeros_like(bulk.table), saturated=False)
-    for lo, hi in ((0, 3_000), (3_000, 5_500), (5_500, 8_000)):
-        inc.insert_many(h1[lo:hi], h2[lo:hi])
-    assert not inc.saturated
-    assert inc.contains(h1, h2).all()
 
 
 def test_sub_segmentation_bounds_segment_size(spark, tmp_path):
@@ -177,7 +137,6 @@ def test_ten_million_key_store_bounded_segments(spark, tmp_path):
         seg = np.load(vdir / f)
         assert int(seg["n"]) <= int(target * 1.5)
         assert seg["bitmap"].nbytes < budget_bytes
-        assert seg["ck_table"].nbytes < budget_bytes
     # membership: every inserted key in a 200k sample must come back maybe
     sample = seen.filter(F.pmod(F.xxhash64("url_sha1"), F.lit(50)) == 0)
     assert store.probe(sample, version=1).filter(~F.col("bloom_maybe")).count() == 0
@@ -230,7 +189,6 @@ def test_exact_membership_no_errors_across_deltas(spark, tmp_path):
     store.build(df_of(base), version=1)
     store.build_delta(df_of(d1), df_of(base + d1), 1, 2)
     store.build_delta(df_of(d2), df_of(base + d1 + d2), 2, 3)
-    assert store.supports_exact(3)
 
     inserted = set(base + d1 + d2)
     fresh = _keys(800, salt="nope")
@@ -366,3 +324,26 @@ def test_pre_manifest_version_dirs_are_invisible(spark, tmp_path):
     )
     store.build(seen, version=3)
     assert store.versions() == [3]
+
+
+def test_bloom_fpr_gate_removes_its_temp_store(spark, tmp_path, monkeypatch):
+    """The bloom_fpr_gate driver query builds its segment store in a temp
+    dir; the dir must be gone once the query returns, and the returned rows
+    must not depend on it."""
+    import tempfile
+
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as entry
+
+    sf = tmp_path / "sf"
+    spark.range(2000).select(F.col("id").alias("o_orderkey")).write.parquet(
+        str(sf / "orders.parquet")
+    )
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    [row] = entry.QUERIES["bloom_fpr_gate"](spark, str(sf)).collect()
+    assert row.n_seen == row.n_fresh == 2000
+    assert row.no_false_negatives and row.fpr_le_2pct
+    assert not list(scratch.glob("bloom_gate_*"))

@@ -7,6 +7,7 @@ the north_star's correctness gate.
 
 import pytest
 
+from etherscan_contract_crawler_spark.engine import crawl
 from etherscan_contract_crawler_spark.engine.crawl import CrawlEngine, EngineConfig
 from etherscan_contract_crawler_spark.oracle.reference_oracle import run_oracle
 
@@ -31,19 +32,21 @@ def _run_engine(spark, seeds_df, tmp_path, **cfg_kw):
 
 
 @pytest.mark.parametrize(
-    "use_bloom,dedup_plan",
+    "use_bloom,gate",
     [
         pytest.param(True, "auto", marks=pytest.mark.slow),   # cost gate picks per epoch
-        pytest.param(True, "store", marks=pytest.mark.slow),  # exact LSM-store dedup forced
+        pytest.param(True, "store", marks=pytest.mark.slow),  # gate at 0: store every epoch
         (False, "auto"),  # plain exact anti-join — the fast-loop parity leg
     ],
 )
 def test_engine_matches_oracle(
-    spark, tiny_seed_rows, tiny_seeds_df, tmp_path, use_bloom, dedup_plan
+    spark, tiny_seed_rows, tiny_seeds_df, tmp_path, monkeypatch, use_bloom, gate
 ):
+    if gate == "store":
+        monkeypatch.setattr(crawl, "STORE_DEDUP_SEEN_RATIO", 0)
     eng, orders, seen, images, dead = _run_engine(
         spark, tiny_seeds_df, tmp_path, epoch_duration_s=10, batch_size=150,
-        use_bloom=use_bloom, dedup_plan=dedup_plan,
+        use_bloom=use_bloom,
     )
     oracle = run_oracle(
         tiny_seed_rows, epoch_duration_s=10, batch_size=150, max_epochs=30

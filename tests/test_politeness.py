@@ -36,16 +36,6 @@ def test_ordering_is_canonical_within_domain(spark, tiny_seeds_df):
         assert keys == sorted(keys), d
 
 
-def test_salting_is_lossless(spark, tiny_seeds_df):
-    """Skew guard must not change the admitted set or ranks."""
-    pending = _pending(spark, tiny_seeds_df)
-    a = schedule_epoch(pending, epoch_duration_s=10, n_salts=1)
-    b = schedule_epoch(pending, epoch_duration_s=10, n_salts=8)
-    sa = {(r.url_sha1, r.rn, r.fetch_slot) for r in a.collect()}
-    sb = {(r.url_sha1, r.rn, r.fetch_slot) for r in b.collect()}
-    assert sa == sb
-
-
 @pytest.mark.slow
 def test_batch_cap_takes_global_topk(spark, tiny_seeds_df):
     pending = _pending(spark, tiny_seeds_df)
@@ -133,22 +123,43 @@ def test_fused_plan_has_mapside_window_group_limit(spark, tiny_seeds_df):
     assert partial_pos != -1, "no Partial-mode WindowGroupLimit in plan"
 
 
-def test_fused_matches_salted_plan(spark, tiny_seeds_df):
-    """The fused single-window plan and the r2 salted two-phase plan are the
-    same operator: identical admitted sets, ranks, and slots."""
+def test_fused_matches_python_reference(spark, tiny_seeds_df):
+    """The fused single-window plan equals a pure-Python reference: rank
+    each domain in canonical order, keep rn <= capacity, slot = (rn-1) //
+    max_calls, offset = slot * period_s. The budgets differ per domain: the
+    hot domain's capacity (70) lifts the literal max_capacity above the
+    default 50, and two domains are cut well below it by their own
+    per-row capacity."""
     pending = _pending(spark, tiny_seeds_df)
-    cols = ["url_sha1", "rn", "fetch_slot", "scheduled_offset_s"]
-    fused = {
-        r["url_sha1"]: (r["rn"], r["fetch_slot"], r["scheduled_offset_s"])
-        for r in schedule_epoch(pending, epoch_duration_s=10, plan="fused")
-        .select(cols).collect()
+    budgets = {
+        "site00000.com": (7, 1),  # capacity 70, below its pending count
+        "site00001.org": (3, 4),  # capacity 3 * floor(10 / 4) = 6
+        "site00002.net": (4, 3),  # capacity 4 * floor(10 / 3) = 12
     }
-    salted = {
+    budgets_df = spark.createDataFrame(
+        [(d, m, p) for d, (m, p) in budgets.items()],
+        "domain string, max_calls int, period_s int",
+    )
+    rows = pending.select("domain", "priority", "next_fetch_time", "url_sha1").collect()
+    by_domain = {}
+    for r in rows:
+        by_domain.setdefault(r.domain, []).append(r)
+    ref = {}
+    for d, rs in by_domain.items():
+        max_calls, period_s = budgets.get(d, (5, 1))
+        capacity = max_calls * (10 // period_s)
+        rs.sort(key=lambda r: (-r.priority, r.next_fetch_time, r.url_sha1))
+        for rn, r in enumerate(rs[:capacity], start=1):
+            slot = (rn - 1) // max_calls
+            ref[r.url_sha1] = (rn, slot, float(slot * period_s))
+    assert sum(1 for r in rows if r.domain == "site00000.com") > 70
+
+    got = {
         r["url_sha1"]: (r["rn"], r["fetch_slot"], r["scheduled_offset_s"])
-        for r in schedule_epoch(pending, epoch_duration_s=10, plan="salted")
-        .select(cols).collect()
+        for r in schedule_epoch(pending, budgets=budgets_df, epoch_duration_s=10)
+        .select("url_sha1", "rn", "fetch_slot", "scheduled_offset_s").collect()
     }
-    assert fused == salted
+    assert got == ref
 
 
 @pytest.mark.slow

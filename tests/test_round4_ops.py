@@ -103,9 +103,10 @@ def test_fetch_chunked_emit_one_row_per_input(spark, monkeypatch):
     # exactly, across chunk boundaries (737 % 64 != 0 on purpose)
     import pyspark.sql.functions as F
 
+    from etherscan_contract_crawler_spark.operators import fetch as fetch_mod
     from etherscan_contract_crawler_spark.operators.fetch import fetch_batch
 
-    monkeypatch.setenv("SPARK_GRAFT_FETCH_EMIT_ROWS", "64")
+    monkeypatch.setattr(fetch_mod, "EMIT_ROWS", 64)
     n = 737
     scheduled = spark.range(n).select(
         F.md5(F.col("id").cast("string")).alias("url_sha1"),
