@@ -2,7 +2,8 @@
 
 Two parts:
   1. Headline queries from __spark_entry__ at $SPARK_GRAFT_SF_DIR (default
-     sf0.1) on local[$SPARK_GRAFT_CPUS] — per-query seconds, fully
+     sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may
+     use) — per-query seconds, fully
      materialized via the noop sink (so column pruning can't skip work).
   2. Crawl-engine scaling evidence (BASELINE.md protocol): the same epoch
      pipeline (schedule -> fetch(synthetic payloads) -> validate -> commit)
@@ -23,7 +24,6 @@ import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 SKIP_SCALING = os.environ.get("SPARK_GRAFT_SKIP_SCALING", "") == "1"
 #: scaling-only refresh: skip the sf0.1 query sweep and re-measure just the
 #: ceiling + scaling levels (+ loop), merging the existing queries section
@@ -164,7 +164,7 @@ def run_queries() -> dict[str, float]:
     import __spark_entry__ as entry_mod
     from etherscan_contract_crawler_spark.session import get_spark
 
-    spark = get_spark(app_name="bench", cpus=CPUS)
+    spark = get_spark(app_name="bench")
     qs = entry_mod.queries()
     # warm the session so q1 doesn't pay JVM startup
     spark.range(1000).count()

@@ -18,6 +18,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 
 def rate_threshold_hex(rate: float) -> str:
@@ -279,7 +280,17 @@ def curriculum_order(
 
     Returns ``(doc_id, difficulty, bucket, position)`` with ``position``
     a gap-free 1-based total order.
+
+    ``difficulty_col`` must be an integral type (tinyint..bigint); any
+    other type raises ``TypeError`` rather than being truncated to a
+    long. The check reads the schema only and runs no job.
     """
+    dtype = docs.schema[difficulty_col].dataType
+    if not isinstance(dtype, IntegralType):
+        raise TypeError(
+            f"curriculum_order: {difficulty_col!r} is {dtype.simpleString()}, "
+            "not an integral type; round or bin fractional scores first"
+        )
     d = F.col(difficulty_col).cast("long")
     src = docs.select(F.col(doc_col).alias("doc_id"), d.alias("difficulty"))
     rng = src.agg(

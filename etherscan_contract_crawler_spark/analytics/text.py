@@ -968,6 +968,12 @@ def lm_perplexity_filter(
     shuffles the corpus bigram stream on (w1, w2) — the standard
     inverted-index join every n-gram operator here pays once. V rides a
     broadcast single-row cross join. No UDFs, no driver collects.
+
+    An empty reference slice (no ``doc_id % ref_mod == 0`` doc with a
+    bigram) leaves no model: V = 0 and every denominator is 0. Under ANSI
+    mode (Spark's default) the scoring job then fails with DIVIDE_BY_ZERO;
+    with ``spark.sql.ansi.enabled=false`` every doc gets NULL ``neg_logp``
+    and ``keep``, as in the DuckDB oracle.
     """
     words = docs.select(
         F.col(doc_col).alias("doc_id"), normalized_words(text_col).alias("_w")

@@ -10,9 +10,29 @@ import os
 
 from pyspark.sql import SparkSession
 
+
+def machine_cpus() -> int:
+    """CPUs this process may run on (its affinity mask, which honours
+    taskset/cgroup pinning where ``os.cpu_count`` does not)."""
+    return len(os.sched_getaffinity(0))
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Driver heap default: a quarter of the machine's ``MemTotal``, at
+    least 4g — local mode runs every task inside this one JVM."""
+    with open(meminfo) as f:
+        for line in f:
+            if line.startswith("MemTotal:"):
+                kib = int(line.split()[1])
+                break
+        else:
+            raise ValueError(f"no MemTotal line in {meminfo}")
+    return f"{max(4, kib // (4 << 20))}g"
+
+
 #: Shuffle-partition default: match core count, not the 200 default — on a
 #: real cluster this is set to ~2-3x total executor cores instead.
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or machine_cpus())
 
 
 def get_spark(
@@ -48,7 +68,10 @@ def get_spark(
         # (SURVEY.md §7 "binary payloads through Arrow"; sweep in
         # BASELINE.md §arrow-batch)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.driver.extraJavaOptions", gc_opts)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
@@ -63,6 +86,14 @@ def get_spark(
         # there is nothing to share — round-robining the single task slot
         # between jobs only thrashes locality — so keep FIFO there.
         .config("spark.scheduler.mode", "FAIR" if cpus > 1 else "FIFO")
+        # PySpark 4 defaults DataFrame debugging on: every Column function
+        # call then also captures its Python call site and pays extra py4j
+        # round trips (active session, conf read, origin set and clear) —
+        # driver time that plan-building loops pay per call. Error messages
+        # lose only the Python call-site context; pass
+        # extra_conf={"spark.python.sql.dataFrameDebugging.enabled": "true"}
+        # to get it back while debugging.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     if master.startswith("spark://"):
         import sys

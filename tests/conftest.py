@@ -7,7 +7,7 @@ from etherscan_contract_crawler_spark.sources.synthetic import gen_seed_rows
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cpus=8, shuffle_partitions=8)
+    s = get_spark(app_name="tests")
     yield s
 
 

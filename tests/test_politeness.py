@@ -110,6 +110,83 @@ def test_global_topk_matches_order_limit(spark):
         ]
         assert got == expect, k
 
+    # ordering edge cases the bucket tree must place exactly as Spark's
+    # sort does: repeated boundaries (one priority and time, 25 keys), a
+    # -0.0 / 0.0 mix (equal in Spark's order, so the key decides), NaN
+    # priorities (sort first under DESC), NULL priorities (last) and NULL
+    # times (first within their priority)
+    repeats = [(f"k{i % 25:02d}", 1.0, "2026-01-01 00:00:00") for i in range(3000)]
+    edges = [
+        (
+            f"z{i:05d}",
+            rng.choice([0.0, -0.0, 0.0, -0.0, float("nan"), None, 0.5]),
+            rng.choice(["2026-01-01 00:00:00", "2026-01-02 00:00:00", None]),
+        )
+        for i in range(3000)
+    ]
+    for rows in (repeats, edges):
+        df = spark.createDataFrame(
+            rows, "url_sha1 string, priority double, nft string"
+        ).select("url_sha1", "priority", F.col("nft").cast("timestamp").alias("next_fetch_time"))
+        for k in (1, 137, 1500, 2999, 3001):
+            expect = [r["url_sha1"] for r in df.orderBy(*canonical_order()).limit(k).collect()]
+            got = [
+                r["url_sha1"]
+                for r in global_topk(df, k).orderBy(*canonical_order()).collect()
+            ]
+            assert got == expect, (rows[0][0], k)
+
+
+def test_global_topk_builds_its_plan_in_o1_py4j_calls(spark):
+    """The bucket column is one SQL expression: a reused-boundary call
+    costs a few hundred py4j round trips whatever the bucket count, not
+    one per Column function per boundary (thousands at 64 buckets)."""
+    import gc
+    import random
+
+    from py4j.clientserver import ClientServerConnection
+
+    from etherscan_contract_crawler_spark.operators.politeness import global_topk
+
+    rng = random.Random(5)
+    rows = [
+        (f"u{i:05d}", float(rng.randrange(1000)), f"2026-01-01 00:{i % 60:02d}:00")
+        for i in range(5000)
+    ]
+    df = spark.createDataFrame(rows, "url_sha1 string, priority double, nft string").select(
+        "url_sha1", "priority", F.col("nft").cast("timestamp").alias("next_fetch_time")
+    )
+
+    def round_trips(n_buckets: int) -> int:
+        state: dict = {}
+        global_topk(df, 500, n_buckets=n_buckets, state=state, defer=True)
+        assert "boundaries" in state
+        orig = ClientServerConnection.send_command
+        calls = 0
+
+        def counting(self, command):
+            nonlocal calls
+            calls += 1
+            return orig(self, command)
+
+        # py4j also sends a delete command when a JavaObject is collected:
+        # collect earlier tests' garbage now, and none during the count
+        gc.collect()
+        gc.disable()
+        ClientServerConnection.send_command = counting
+        try:
+            global_topk(df, 500, n_buckets=n_buckets, state=state, defer=True)
+        finally:
+            ClientServerConnection.send_command = orig
+            gc.enable()
+        state.pop("_release").unpersist()
+        return calls
+
+    n16, n256 = round_trips(16), round_trips(256)
+    assert n16 < 500, n16
+    assert n256 < 500, n256
+    assert abs(n256 - n16) < 50, (n16, n256)
+
 
 def test_fused_plan_has_mapside_window_group_limit(spark, tiny_seeds_df):
     """r3 schedule fusion: the single admission window must carry a PARTIAL

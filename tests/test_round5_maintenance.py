@@ -4,6 +4,7 @@ filter, and curriculum ordering."""
 
 import math
 
+import pytest
 from pyspark.sql import functions as F
 
 from etherscan_contract_crawler_spark.analytics.sampling import curriculum_order
@@ -88,6 +89,30 @@ def test_lm_perplexity_hand_value_and_split(spark):
     assert out[1]["keep"] is True and out[2]["keep"] is True
     strict = {r["doc_id"]: r for r in lm_perplexity_filter(docs, max_neg_logp=0.5).collect()}
     assert strict[1]["keep"] is True and strict[2]["keep"] is False
+
+
+def test_lm_perplexity_empty_reference_slice(spark):
+    # no doc_id % 10 == 0 -> no reference model: V = 0 and every
+    # denominator is 0 -> DIVIDE_BY_ZERO under ANSI mode, NULL without it
+    from pyspark.errors import ArithmeticException
+
+    docs = spark.createDataFrame([(1, "a b a b"), (2, "z z")], ["doc_id", "text"])
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+    with pytest.raises(ArithmeticException, match="DIVIDE_BY_ZERO"):
+        lm_perplexity_filter(docs, max_neg_logp=1.0).collect()
+    spark.conf.set("spark.sql.ansi.enabled", "false")
+    try:
+        out = lm_perplexity_filter(docs, max_neg_logp=1.0).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", "true")
+    assert sorted((r["doc_id"], r["n_bigrams"]) for r in out) == [(1, 3), (2, 1)]
+    assert all(r["neg_logp"] is None and r["keep"] is None for r in out)
+
+
+def test_curriculum_rejects_fractional_difficulty(spark):
+    docs = spark.createDataFrame([(1, 0.5), (2, 1.5)], ["doc_id", "difficulty"])
+    with pytest.raises(TypeError, match="integral"):
+        curriculum_order(docs)
 
 
 def test_curriculum_positions_gapfree_and_monotone(spark):

@@ -176,24 +176,31 @@ def main() -> None:
                  "modes": {}}
     for mode in ("current", "nopart", "bigblock", "rawbin"):
         for cpus in (4, 16):
-            walls = []
+            walls, errors = [], []
             for _ in range(repeats):
-                p = subprocess.run(
-                    [sys.executable, os.path.abspath(__file__),
-                     str(n_rows), str(repeats), "--worker", mode, str(cpus)],
-                    capture_output=True, text=True, timeout=900, cwd=REPO,
-                )
+                # one hung attempt is recorded and skipped, so it cannot
+                # lose the modes already measured
+                try:
+                    p = subprocess.run(
+                        [sys.executable, os.path.abspath(__file__),
+                         str(n_rows), str(repeats), "--worker", mode, str(cpus)],
+                        capture_output=True, text=True, timeout=900, cwd=REPO,
+                    )
+                except subprocess.TimeoutExpired:
+                    errors.append("timeout after 900 s")
+                    continue
                 line = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
                 if line:
                     walls.append(json.loads(line[-1])["wall_s"])
-            key = f"{mode}-{cpus}"
+                else:
+                    errors.append(p.stderr[-300:])
+            entry = {}
             if walls:
-                res["modes"][key] = {
-                    "wall_s": min(walls),
-                    "mb_per_s": round(total_bytes / 1e6 / min(walls), 1),
-                }
-            else:
-                res["modes"][key] = {"error": p.stderr[-300:]}
+                entry["wall_s"] = min(walls)
+                entry["mb_per_s"] = round(total_bytes / 1e6 / min(walls), 1)
+            if errors:
+                entry["errors"] = errors
+            res["modes"][f"{mode}-{cpus}"] = entry
     for cpus in (4, 16):
         wall = min(mp_baseline(n_rows, cpus) for _ in range(repeats))
         res["modes"][f"mpbase-{cpus}"] = {
