@@ -325,16 +325,6 @@ class CrawlEngine:
             # landed stats already carry the schedule's cardinality — no
             # separate count() job wave
             n_scheduled = sum(int(r["n"]) for r in stat_rows)
-            if self.cfg.extra.get("debug_reconcile"):
-                # r3 ADVICE: a fetcher that drops rows on exception would
-                # silently skew lineage counters; this opt-in mode measures
-                # the schedule directly and fails loudly on divergence
-                actual = scheduled.count()
-                if actual != n_scheduled:
-                    raise RuntimeError(
-                        f"fetch_batch contract violation: {actual} scheduled "
-                        f"rows but {n_scheduled} landed (one-row-per-input)"
-                    )
         else:
             # replay: landed rows ⊂ scheduled (keys whose payloads already
             # committed are skipped by the fetch but still need the

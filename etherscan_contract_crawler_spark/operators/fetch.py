@@ -78,12 +78,14 @@ def fetch_batch(
     """Run the fetch stage; returns one full row per attempted URL (ok or
     failed), payload columns null on failure.
 
-    CONTRACT: exactly ONE output row per input row, always — a fetcher
-    exception settles the row as status='failed', it never drops it. The
-    engine derives the epoch's schedule cardinality and frontier offsets
-    from the LANDED rows (one count-free job instead of a separate
-    scheduled.count() wave), which is sound only under this invariant;
-    ``EngineConfig.extra['debug_reconcile']`` re-checks it per epoch.
+    CONTRACT: exactly ONE output row per input row — the loop below appends
+    one row per input whatever the fetcher returns (``None`` after the last
+    retry settles the row as status='failed'). A fetcher EXCEPTION is not
+    caught: it fails the task, so the landing job fails and the epoch
+    replays on restart. The engine derives the epoch's schedule cardinality
+    and frontier offsets from the LANDED rows (one count-free job instead
+    of a separate scheduled.count() wave), which is sound under this
+    invariant.
 
     U4 payload validation (decode + PSNR + caption/phash vs the
     deterministic reference) is fused into the same Arrow pass —

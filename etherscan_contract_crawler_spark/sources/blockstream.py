@@ -29,6 +29,7 @@ import json
 import os
 from typing import Iterator, Tuple
 
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
 #: event-time carrying block schema (ts powers watermarked dedup downstream)
@@ -149,3 +150,13 @@ class BlockStreamDataSource(DataSource):
 
     def simpleStreamReader(self, schema) -> BlockStreamReader:
         return BlockStreamReader(self.options)
+
+
+def read_block_stream(spark: SparkSession, path: str, use_datasource: bool) -> DataFrame:
+    """The block stream at ``path``: through the custom DataSource above
+    (production shape) or as a parquet file stream of BLOCKS_DDL rows
+    (fixture shape)."""
+    if not use_datasource:
+        return spark.readStream.schema(BLOCKS_DDL).parquet(path)
+    spark.dataSource.register(BlockStreamDataSource)
+    return spark.readStream.format("blockstream").option("path", path).load()

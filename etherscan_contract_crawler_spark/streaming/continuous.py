@@ -8,14 +8,16 @@ the round-2 streaming pieces).
     monitor_transform (creation/call split, B7 mark semantics)
         │ withWatermark + dropDuplicatesWithinWatermark   (hot-tier dedup,
         ▼                                                  state = window-bounded)
-    foreachBatch:
+    foreachBatch — the one lander (streaming/sink.py), keyed by address:
         anti-join durable seen table (long-tail dedup, restart-proof)
-        stateful token-bucket gate? — admission happens in the BATCH engine's
-            politeness windows once rows are frontier-resident; the streaming
-            ratelimit operator (streaming/ratelimit.py) is for pipelines that
-            fetch straight off the stream
-        seeds_to_frontier projection → frontier SnapshotTable append
-        seen-table merge (mark-at-schedule, like the reference :85-86)
+        discovered_to_frontier projection → frontier append
+        seen append (mark-at-schedule, like the reference :85-86)
+        both appends guarded by batch id, so a replayed micro-batch
+        skips whatever already landed
+
+Admission (a token-bucket gate) happens in the BATCH engine's politeness
+windows once rows are frontier-resident; the streaming ratelimit operator
+(streaming/ratelimit.py) is for pipelines that fetch straight off the stream.
 
 The crawl engine then schedules these rows in its next epoch — streaming
 discovery and batch fetching share one frontier, which is exactly the
@@ -25,11 +27,12 @@ table here).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import SparkSession
 
+from ..sources.blockstream import read_block_stream
 from ..storage.icetable import SnapshotTable
-from .monitor import monitor_transform
+from .monitor import discovered_to_frontier, monitor_transform
+from .sink import land_to_frontier
 
 DISCOVERED_SEEN_DDL = "address string"
 
@@ -51,51 +54,16 @@ def run_discovery_to_frontier(
 
     Exactly-once end to end: the source replays by block offset, the
     watermarked state dedups the hot window, the seen-table anti-join
-    dedups the long tail, and the frontier append is keyed — a micro-batch
-    that crashes mid-foreachBatch re-runs against the same seen state.
+    dedups the long tail, and each append is skipped when its table's
+    lineage already holds this query's batch id — a micro-batch that
+    crashes mid-foreachBatch re-runs without duplicating frontier rows.
     """
-    from ..sources.seeds import seeds_to_frontier
-
-    if use_datasource:
-        from ..sources.blockstream import BlockStreamDataSource
-
-        spark.dataSource.register(BlockStreamDataSource)
-        stream = spark.readStream.format("blockstream").option("path", chain_dir).load()
-    else:
-        from ..sources.blockstream import BLOCKS_DDL
-
-        stream = spark.readStream.schema(BLOCKS_DDL).parquet(chain_dir)
-
     discovered = (
-        monitor_transform(stream)
+        monitor_transform(read_block_stream(spark, chain_dir, use_datasource))
         .withWatermark("ts", watermark_delay)
         .dropDuplicatesWithinWatermark(["address"])
     )
-
-    def land(batch: DataFrame, batch_id: int) -> None:
-        fresh = (
-            batch.dropDuplicates(["address"])
-            .join(seen.read(batch.sparkSession).select("address"), "address", "left_anti")
-            .cache()
-        )
-        seeds = fresh.select(
-            "block",
-            "tx_hash",
-            F.concat(
-                F.lit(f"https://{domain}/address/"), F.col("address"), F.lit("#code")
-            ).alias("url"),
-            F.lit(0.5).alias("priority"),
-        )
-        rows, _ = seeds_to_frontier(seeds, n_buckets=n_buckets, epoch=epoch)
-        frontier.append(rows.dropDuplicates(["url_sha1"]))
-        # mark-at-schedule (reference :85-86): seen even before any fetch
-        seen.merge_not_matched(fresh.select("address"), ["address"])
-        fresh.unpersist()
-
-    return (
-        discovered.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return land_to_frontier(
+        discovered, checkpoint_dir, "address", frontier, seen,
+        lambda fresh: discovered_to_frontier(fresh, n_buckets, epoch, domain),
     )

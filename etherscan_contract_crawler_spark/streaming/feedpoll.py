@@ -14,8 +14,11 @@ loop uses (streaming/continuous.py run_discovery_to_frontier):
         │                                 (hot-tier: polls re-announce the
         ▼                                  same items every cycle; state is
     foreachBatch:                          window-bounded, not corpus-bound)
+      the one lander (streaming/sink.py), keyed by url:
         anti-join durable url-seen table  (long-tail, restart-proof)
-        frontier append + seen merge      (mark-at-schedule)
+        frontier append + seen append     (mark-at-schedule; each skipped
+                                           when its lineage holds this
+                                           query's batch id)
 
 Items without a parseable pubDate can't ride event-time dedup, so this
 leg DROPS them (filtered before the watermark) — they remain reachable
@@ -31,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..sources.feeds import parse_feed_items
 from ..storage.icetable import SnapshotTable
+from .sink import land_to_frontier
 
 FEED_SEEN_DDL = "url string"
 
@@ -66,9 +70,9 @@ def run_feed_poll_to_frontier(
     Exactly-once end to end: the file source replays by file listing under
     the checkpoint, the watermarked state dedups re-announced links inside
     the delay window (poll cadence ≪ 7 days), the seen-table anti-join
-    dedups the long tail, and the frontier append is keyed by url — a
-    micro-batch that crashes mid-foreachBatch re-runs against the same
-    seen state.
+    dedups the long tail, and each append is skipped when its table's
+    lineage already holds this query's batch id — a micro-batch that
+    crashes mid-foreachBatch re-runs without duplicating frontier rows.
     """
     # binaryFile, not text: the streaming text source ignores `wholetext`
     # (verified — it yields one row per LINE, which breaks the multi-line
@@ -89,25 +93,7 @@ def run_feed_poll_to_frontier(
         .withWatermark("pub_ts", watermark_delay)
         .dropDuplicatesWithinWatermark(["link"])
     )
-
-    def land(batch: DataFrame, batch_id: int) -> None:
-        rows = (
-            feed_items_to_frontier(batch)
-            .dropDuplicates(["url"])
-            .join(
-                seen.read(batch.sparkSession).select("url"),
-                "url",
-                "left_anti",
-            )
-        ).cache()
-        frontier.append(rows)
-        seen.merge_not_matched(rows.select("url"), ["url"])
-        rows.unpersist()
-
-    return (
-        fresh_items.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+    return land_to_frontier(
+        feed_items_to_frontier(fresh_items), checkpoint_dir, "url", frontier, seen,
+        lambda fresh: fresh,
     )

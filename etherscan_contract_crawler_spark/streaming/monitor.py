@@ -17,11 +17,12 @@ Spark-first mapping:
   * seen set -> BOUNDED, two tiers (r1 VERDICT #5): the hot tier is
     ``dropDuplicatesWithinWatermark`` state (sized by the watermark delay,
     NOT by total history — plain ``dropDuplicates`` grows forever); the long
-    tail is the durable seen table probed per micro-batch in ``foreachBatch``
-    (stream-static left_anti — the same exact-join backstop the batch engine
-    uses, bloom-prefilterable at scale);
-  * CSV append -> ``foreachBatch`` append into the frontier SnapshotTable,
-    which feeds the next crawl epoch (the frontier-expansion loop, §3.3).
+    tail is the durable seen table the frontier leg (continuous.py) probes
+    per micro-batch through the one lander in sink.py;
+  * CSV append -> ``run_monitor_stream``'s exactly-once parquet file sink
+    (the reference monitor's shape), or the frontier leg, which appends
+    into the frontier SnapshotTable that feeds the next crawl epoch (the
+    frontier-expansion loop, §3.3) under a batch-id replay guard.
 
 The core engine stays epoch-batch (deterministic + resumable, matching the
 reference's poll loop); this module is the continuous face over the same
@@ -33,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.blockstream import BLOCKS_DDL  # noqa: F401  (re-export, one schema)
+from ..sources.blockstream import read_block_stream
 
 DISCOVERED_DDL = "block long, ts timestamp, tx_hash string, address string"
 
@@ -60,9 +61,7 @@ def run_monitor_stream(
     input_dir: str,
     checkpoint_dir: str,
     output_dir: str,
-    dedup_calls: bool = True,
     watermark_delay: str = "10 minutes",
-    seen_table=None,
     use_datasource: bool = False,
 ):
     """Streaming monitor: watch the chain for new blocks, emit newly
@@ -71,55 +70,22 @@ def run_monitor_stream(
     State is bounded: ``withWatermark(ts) + dropDuplicatesWithinWatermark``
     keeps only addresses younger than the watermark in state (the streaming
     analog the survey names for T2, SURVEY.md §2.8), so state size tracks the
-    recent-duplicate window, not total history. When ``seen_table`` (a
-    SnapshotTable) is given, each micro-batch also anti-joins it and merges
-    its own output back — the durable long-tail dedup that survives both
-    restarts and watermark expiry, mark-at-schedule like the reference (B7).
+    recent-duplicate window, not total history. The parquet file sink is
+    exactly-once: its commit log ties each file to one batch id. Durable
+    long-tail dedup is the frontier leg's (continuous.py).
 
     ``use_datasource=True`` reads through the custom Python DataSource
     (production shape); otherwise a parquet file stream (fixture shape).
     Uses availableNow in tests (drain-and-stop); processingTime in production.
     """
-    if use_datasource:
-        from ..sources.blockstream import BlockStreamDataSource
-
-        spark.dataSource.register(BlockStreamDataSource)
-        stream = (
-            spark.readStream.format("blockstream").option("path", input_dir).load()
-        )
-    else:
-        stream = spark.readStream.schema(BLOCKS_DDL).parquet(input_dir)
-    discovered = monitor_transform(stream)
-    if dedup_calls:
-        discovered = discovered.withWatermark(
-            "ts", watermark_delay
-        ).dropDuplicatesWithinWatermark(["address"])
-
-    if seen_table is None:
-        return (
-            discovered.writeStream.format("parquet")
-            .option("path", output_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-
-    def land_batch(batch: DataFrame, batch_id: int) -> None:
-        # long-tail dedup: exact anti-join vs the durable seen set (the
-        # bloom-prefilterable backstop at scale), then mark-at-schedule
-        batch = batch.dropDuplicates(["address"])  # within-batch
-        fresh = batch.join(
-            seen_table.read(batch.sparkSession).select("address"),
-            "address",
-            "left_anti",
-        ).cache()
-        fresh.write.mode("append").parquet(output_dir)
-        seen_table.merge_not_matched(fresh.select("address"), ["address"])
-        fresh.unpersist()
-
+    discovered = (
+        monitor_transform(read_block_stream(spark, input_dir, use_datasource))
+        .withWatermark("ts", watermark_delay)
+        .dropDuplicatesWithinWatermark(["address"])
+    )
     return (
-        discovered.writeStream.foreachBatch(land_batch)
+        discovered.writeStream.format("parquet")
+        .option("path", output_dir)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
         .trigger(availableNow=True)

@@ -1,5 +1,6 @@
 """Streaming monitor: discovery semantics, BOUNDED stateful dedup, restart
-resume, long-tail seen-table dedup, and the custom Python DataSource source."""
+resume, long-tail seen-table dedup (through the frontier leg), and the
+custom Python DataSource source."""
 
 import pytest
 import datetime
@@ -9,7 +10,12 @@ from etherscan_contract_crawler_spark.sources.blockstream import (
     BLOCKS_DDL,
     write_block_file,
 )
+from etherscan_contract_crawler_spark.sources.seeds import FRONTIER_DDL
 from etherscan_contract_crawler_spark.storage.icetable import SnapshotTable
+from etherscan_contract_crawler_spark.streaming.continuous import (
+    DISCOVERED_SEEN_DDL,
+    run_discovery_to_frontier,
+)
 from etherscan_contract_crawler_spark.streaming.monitor import (
     discovered_to_frontier,
     monitor_transform,
@@ -95,33 +101,38 @@ def test_dedup_state_bounded_by_watermark(spark, tmp_path):
 @pytest.mark.slow
 def test_long_tail_dedup_via_seen_table(spark, tmp_path):
     """An address recurring AFTER watermark expiry is still deduped — by the
-    durable seen table probed in foreachBatch (the bloom-backed long tail),
-    which also survives restarts."""
-    in_dir, out_dir, ckpt = (str(tmp_path / d) for d in ("in", "out", "ckpt"))
+    durable seen table the frontier leg anti-joins in foreachBatch, which
+    also survives restarts."""
+    in_dir, ckpt = str(tmp_path / "in"), str(tmp_path / "ckpt")
     os.makedirs(in_dir)
+    frontier = SnapshotTable(str(tmp_path / "frontier"))
+    frontier.create(FRONTIER_DDL)
     seen = SnapshotTable(str(tmp_path / "seen"))
-    seen.create("address string")
-    rows1 = [(1, _ts(0, hour=9), "0xt1", "0xAAA1", None, True)]
-    _blocks(spark, rows1).coalesce(1).write.mode("append").parquet(in_dir)
-    q = run_monitor_stream(
-        spark, in_dir, ckpt, out_dir, watermark_delay="10 minutes", seen_table=seen
-    )
-    q.awaitTermination(120)
+    seen.create(DISCOVERED_SEEN_DDL)
 
-    # same address two hours later: state has long expired it — only the
-    # seen-table anti-join can stop it
-    rows2 = [
-        (2, _ts(0, hour=11), "0xt2", "0xAAA1", None, True),
-        (2, _ts(0, hour=11), "0xt3", "0xEEE5", None, True),
-    ]
-    _blocks(spark, rows2).coalesce(1).write.mode("append").parquet(in_dir)
-    q2 = run_monitor_stream(
-        spark, in_dir, ckpt, out_dir, watermark_delay="10 minutes", seen_table=seen
-    )
-    q2.awaitTermination(120)
-    got = sorted(r.address for r in spark.read.parquet(out_dir).collect())
-    assert got == ["0xaaa1", "0xeee5"]
-    assert {r.address for r in seen.read(spark).collect()} == {"0xaaa1", "0xeee5"}
+    def drain(rows, epoch):
+        _blocks(spark, rows).coalesce(1).write.mode("append").parquet(in_dir)
+        run_discovery_to_frontier(
+            spark, in_dir, ckpt, frontier, seen, n_buckets=8, epoch=epoch,
+            watermark_delay="10 minutes", use_datasource=False,
+        ).awaitTermination(120)
+
+    # 40-hex addresses: the frontier projection rejects anything else
+    aaa1, ccc3, eee5 = ("0x" + a * 10 for a in ("AAA1", "CCC3", "EEE5"))
+    drain([(1, _ts(0, hour=9), "0xt1", aaa1, None, True)], 0)
+    # an hour later: the watermark (10:00 - 10 min) passes aaa1's state expiry
+    # (9:10), so the state forgets it
+    drain([(2, _ts(0, hour=10), "0xt2", ccc3, None, True)], 1)
+    # aaa1 again: only the seen-table anti-join can stop it
+    drain([
+        (3, _ts(0, hour=11), "0xt3", aaa1, None, True),
+        (3, _ts(0, hour=11), "0xt4", eee5, None, True),
+    ], 2)
+    urls = sorted(r.url for r in frontier.read(spark).collect())
+    assert urls == [f"https://rpc.internal/address/{a.lower()}#code" for a in (aaa1, ccc3, eee5)]
+    assert {r.address for r in seen.read(spark).collect()} == {
+        a.lower() for a in (aaa1, ccc3, eee5)
+    }
 
 
 @pytest.mark.slow
