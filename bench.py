@@ -7,29 +7,29 @@ Two parts:
      materialized via the noop sink (so column pruning can't skip work).
   2. Crawl-engine scaling evidence (BASELINE.md protocol): the same epoch
      pipeline (schedule -> fetch(synthetic payloads) -> validate -> commit)
-     on the same deterministic frontier at local[8] and local[32] in separate
-     JVMs; reports URLs/s at both and efficiency = (thr32/thr8)/4.
+     on the same deterministic frontier at local[1] and local[4], three
+     alternating runs each in separate JVMs; reports the URLs/s of every run
+     and efficiency = median(thr4) / median(thr1) / 4 against the 0.8 gate.
+     ``SPARK_GRAFT_SKIP_SCALING=1`` skips this part.
 
 Prints ONE JSON line:
   {"metric": ..., "value": <total sec>, "unit": "sec", "queries": {...},
    "sf": ..., "crawl_scaling": {...}}
+
+    python bench.py
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import subprocess
 import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 SKIP_SCALING = os.environ.get("SPARK_GRAFT_SKIP_SCALING", "") == "1"
-#: scaling-only refresh: skip the sf0.1 query sweep and re-measure just the
-#: ceiling + scaling levels (+ loop), merging the existing queries section
-#: from BENCH_DETAIL.json — used to re-stamp the gate in a clean canary
-#: window without paying the ~40 min query sweep again
-SCALING_ONLY = os.environ.get("SPARK_GRAFT_SCALING_ONLY", "") == "1"
 
 HEADLINE = [
     "seed_ingest_dedup",
@@ -141,23 +141,18 @@ HEADLINE = [
 
 #: one compute-dominated epoch per run (BASELINE.md: wall measured over a
 #: whole warmed-up epoch — schedule -> fetch+validate+land -> commits ->
-#: bloom delta — identical input bytes at every parallelism level).
-#: Levels 1/4/16 give two N->4N pairs plus a curve. Per-level repeats with
-#: best-wall-kept: the box shows ~5% steal and interference windows, so
-#: min-wall is the least-interference estimator. The 4->16 pair is reported
-#: against the measured single-box ceiling (the same payload work under
-#: plain multiprocessing scales 4->16 at ~0.83 — memory bandwidth, not
-#: engine, BASELINE.md §sandbox-noise); 1->4 is the pair the box can
-#: actually evidence cleanly.
+#: bloom delta — identical input bytes at both parallelism levels).
 BENCH_SEEDS = "/tmp/spark_graft_bench_seeds_250k.parquet"
 #: batch-size is pinned EXPLICITLY: identical bytes of work at every level
 #: (submit_job would otherwise default it to 20k, where fixed per-epoch
 #: overhead dominates and the measurement stops being about scaling)
 SCALING_ARGS = ["--epochs", "1", "--epoch-duration", "1200", "--warmup-batch", "5000",
                 "--batch-size", "120000", "--fetcher", "synthetic", "--seeds", BENCH_SEEDS]
-#: cpus -> BASE repeats; the canary-gated retry loop in run_scaling adds up
-#: to MAX_EXTRA_ATTEMPTS more where windows were degraded or the gate failed
-SCALING_LEVELS = {1: 1, 4: 2, 16: 2}
+#: the north-rule pair, N and 4N cores, run in interleaved rounds (1,4,1,4,1,4)
+#: so a slow stretch of the box falls on both levels instead of one
+SCALING_PAIR = (1, 4)
+SCALING_ROUNDS = 3
+GATE_THRESHOLD = 0.8  # north_rule: scaling efficiency >= 0.8 from N to 4N
 
 
 def run_queries() -> dict[str, float]:
@@ -182,446 +177,71 @@ def run_queries() -> dict[str, float]:
     return out
 
 
-def _mp_payload_work(args) -> int:
-    """One worker's share of the hardware-ceiling probe: the same payload
-    work the synthetic fetcher does (deterministic image synthesis + decode/
-    PSNR/phash validation), with zero Spark in the loop."""
-    import hashlib
-
-    lo, hi = args
-    from etherscan_contract_crawler_spark.operators.validate import validate_payload_row
-    from etherscan_contract_crawler_spark.sources.synthetic import payload_for_key
-
-    for i in range(lo, hi):
-        key = hashlib.sha1(f"ceiling{i}".encode()).hexdigest()
-        p = payload_for_key(key)
-        p.pop("_pixels", None)
-        validate_payload_row(p)
-    return hi - lo
+def _run_level(cpus: int, repo: str, use_submit: bool) -> dict:
+    """One crawl epoch at local[cpus] in its own process; its JSON line."""
+    if use_submit:
+        cmd = ["bash", os.path.join(repo, "tools", "submit.sh"), "--cpus", str(cpus),
+               *SCALING_ARGS]
+    else:
+        cmd = [sys.executable, "-m", "etherscan_contract_crawler_spark.bench_crawl",
+               "--cpus", str(cpus), *SCALING_ARGS]
+    try:
+        p = subprocess.run(cmd, capture_output=True, text=True, timeout=1500, cwd=repo)
+    except subprocess.TimeoutExpired:
+        return {"error": "timeout"}
+    line = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
+    return json.loads(line[-1]) if line else {"error": p.stderr[-500:]}
 
 
-def measure_mp_ceiling(total: int = 12_800, repeats: int = 2) -> dict:
-    """MEASURE (not assume — r1 ADVICE) the box's own 4->16 process-scaling
-    ceiling on the fetch payload work under plain multiprocessing. The
-    engine's 4->16 efficiency is read against this hardware number: on this
-    single-socket box the payload pipeline saturates memory bandwidth before
-    16 workers, which no dataflow engine can scale through; real executors
-    bring their own memory controllers."""
-    import multiprocessing as mp
-
-    for v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
-        os.environ.setdefault(v, "1")
-    thr = {}
-    for procs in (1, 4, 16):
-        walls = []
-        chunks = [
-            (w * total // procs, (w + 1) * total // procs) for w in range(procs)
-        ]
-        with mp.get_context("fork").Pool(procs) as pool:
-            pool.map(_mp_payload_work, chunks[:procs])  # warm the pool
-            for _ in range(repeats):
-                t0 = time.time()
-                pool.map(_mp_payload_work, chunks)
-                walls.append(time.time() - t0)
-        thr[procs] = total / min(walls)
-    # this probe doubles as the BOX-HEALTH CANARY: it is pure numpy +
-    # multiprocessing (no Spark), so when its absolute URLs/s moves between
-    # runs, the box moved, not the engine — read the engine's efficiencies
-    # against the same window's ceilings, and its absolute throughput
-    # against the same window's canary throughput.
-    return {
-        "method": "multiprocessing pool, same payload work as the synthetic "
-        "fetcher, same total work per level, best-of-%d" % repeats,
-        "urls_per_sec_1proc": round(thr[1], 1),
-        "urls_per_sec_4proc": round(thr[4], 1),
-        "urls_per_sec_16proc": round(thr[16], 1),
-        "ceiling_1_to_4": round(thr[4] / thr[1] / 4.0, 3),
-        "ceiling_4_to_16": round(thr[16] / thr[4] / 4.0, 3),
-    }
-
-
-#: a window whose canary is below this fraction of the run's best canary is
-#: DEGRADED — the box (CPU steal / co-tenant interference, BASELINE.md
-#: §sandbox-noise), not the engine, and the level is retried (r2 VERDICT #2)
-CLEAN_WINDOW = 0.85
-#: total extra (beyond-base) level attempts — bounds worst-case bench wall.
-#: a scaling-only refresh skips the ~40 min query sweep, so it can afford a
-#: much larger retry budget chasing clean gate windows (r3 VERDICT #1b)
-MAX_EXTRA_ATTEMPTS = 12 if SCALING_ONLY else 6
-#: per-level cap on extra attempts so one level cannot eat the whole budget
-#: (observed: a slow wave kept re-marking local[16] degraded as best_canary
-#: rose, exhausting the budget before the truly-implausible level retried)
-MAX_EXTRA_PER_LEVEL = 6 if SCALING_ONLY else 3
-#: thr(4 cores) < LOW_PLAUSIBILITY x thr(1 core) is physically impossible
-#: for this embarrassingly-parallel payload pipeline on a healthy box (the
-#: mp ceiling never measured 1->4 below 3.4x) — it means the 4-core level
-#: ran inside a degradation wave too long/JVM-specific for the 2 s canary
-#: to see. Retry that level on engine-throughput evidence, canary or not.
-LOW_PLAUSIBILITY = 2.0
-GATE_THRESHOLD = 0.8  # north_rule: scaling efficiency >= 0.8 from N to 4N
-
-
-def quick_canary(total: int = 2_400, procs: int = 4, repeats: int = 2) -> float:
-    """~2 s box-health probe run immediately BEFORE and AFTER each scaling
-    attempt (bracketing): the same payload work as the synthetic fetcher
-    under plain multiprocessing (zero Spark). Its absolute URLs/s moves only
-    when the box moves, so each engine measurement gets stamped with the
-    sustained health (min of the bracket) of the window it ran in."""
-    import multiprocessing as mp
-
-    chunks = [(w * total // procs, (w + 1) * total // procs) for w in range(procs)]
-    walls = []
-    with mp.get_context("fork").Pool(procs) as pool:
-        pool.map(_mp_payload_work, [(0, 8)] * procs)  # warm the pool
-        for _ in range(repeats):
-            t0 = time.time()
-            pool.map(_mp_payload_work, chunks)
-            walls.append(time.time() - t0)
-    return total / min(walls)
-
-
-def run_scaling(ceiling: dict | None = None) -> dict:
+def run_scaling() -> dict:
+    """The north-rule pair: the same epoch at local[1] and local[4], each
+    run a separate spark-submit process through the --py-files packaging
+    path (tools/submit.sh; ``python -m`` when no spark-submit binary
+    exists). Efficiency = median URLs/s at 4 cores / median at 1 core / 4,
+    the median of alternating runs."""
     if not os.path.exists(BENCH_SEEDS):
         from etherscan_contract_crawler_spark.sources.synthetic import gen_seed_parquet
 
         gen_seed_parquet(BENCH_SEEDS, 250_000, n_domains=8_000)
     repo = os.path.dirname(os.path.abspath(__file__)) or "."
-    # each parallelism level is its own spark-submit PROCESS through the
-    # --py-files packaging path (tools/submit.sh) — the closest sandbox
-    # analog of the north_rule's run-at-two-cluster-sizes protocol; falls
-    # back to `python -m` when no spark-submit binary exists
-    submit_sh = os.path.join(repo, "tools", "submit.sh")
     use_submit = os.path.exists("/opt/spark/bin/spark-submit")
+    runs: dict[int, list] = {c: [] for c in SCALING_PAIR}
+    for _ in range(SCALING_ROUNDS):
+        for cpus in SCALING_PAIR:
+            runs[cpus].append(_run_level(cpus, repo, use_submit))
     res: dict = {"harness": "spark-submit --py-files" if use_submit else "python -m"}
-    state = {"best_canary": 0.0}
-    runs: dict[int, list] = {c: [] for c in SCALING_LEVELS}
-
-    def attempt(cpus: int) -> None:
-        # BRACKET the run with canary probes: a multi-minute engine run
-        # spans several of the box's interference waves, so a single
-        # before-probe mis-stamps any window that turns mid-run (the r3->r4
-        # overnight run stamped its FASTEST local[1] run dirty and a slow
-        # one clean). The window's health = min(before, after) — sustained
-        # health across the whole span, and a single 2 s canary spike can
-        # no longer set the cleanliness reference for everyone else because
-        # the reference (best_canary) is the best SUSTAINED window too.
-        canary_before = quick_canary()
-        if use_submit:
-            cmd = ["bash", submit_sh, "--cpus", str(cpus), *SCALING_ARGS]
-        else:
-            cmd = [sys.executable, "-m", "etherscan_contract_crawler_spark.bench_crawl",
-                   "--cpus", str(cpus), *SCALING_ARGS]
-        try:
-            p = subprocess.run(
-                cmd, capture_output=True, text=True, timeout=1500, cwd=repo,
-            )
-            line = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
-            r = json.loads(line[-1]) if line else {"error": p.stderr[-500:]}
-        except subprocess.TimeoutExpired:
-            r = {"error": "timeout"}
-        canary_after = quick_canary()
-        r["canary_before"] = round(canary_before, 1)
-        r["canary_after"] = round(canary_after, 1)
-        r["window_canary_urls_per_sec"] = round(min(canary_before, canary_after), 1)
-        state["best_canary"] = max(
-            state["best_canary"], r["window_canary_urls_per_sec"]
-        )
-        runs[cpus].append(r)
-
-    def kept(cpus: int) -> dict:
-        """Best run of the level — preferring CLEAN-window runs when any
-        exist, so the stamped gate is computed from clean windows whenever
-        the box allowed one (r3 VERDICT #1b). Honesty guard: preferring a
-        clean-but-slower local[1] run can only INFLATE the 1->4 ratio, and
-        the plausibility cap + retry loop push back on exactly that."""
-        ok = [r for r in runs[cpus] if "urls_per_sec" in r]
-        if not ok:
-            return runs[cpus][-1]
-        clean = [r for r in ok if window_ratio(r) >= CLEAN_WINDOW]
-        return max(clean or ok, key=lambda r: r["urls_per_sec"])
-
-    def window_ratio(r: dict) -> float:
-        if not state["best_canary"]:
-            return 1.0
-        return r.get("window_canary_urls_per_sec", 0.0) / state["best_canary"]
-
-    def eff(n: int, four_n: int):
-        try:
-            return round(
-                kept(four_n)["urls_per_sec"] / kept(n)["urls_per_sec"] / 4.0, 3
-            )
-        except Exception:
-            return None
-
-    # base attempts run in ROUNDS across levels (1,4,16,4,16), not level by
-    # level: the box's degradation waves last minutes, so a level-by-level
-    # order can put one entire level inside a wave while its peers run
-    # clean — which skews every ratio. Interleaving spreads any wave across
-    # all levels and best-of-windows repairs the rest.
-    for rnd in range(max(SCALING_LEVELS.values())):
-        for cpus, repeats in SCALING_LEVELS.items():
-            if rnd < repeats:
-                attempt(cpus)
-
-    # canary-gated retry loop (r2 VERDICT #2): an engine number recorded in
-    # a degraded window is evidence about the BOX, not the engine — re-run
-    # that level (best-of-windows kept) instead of shipping it. One bounded
-    # gate retry of the 4-core level is allowed when every window is clean:
-    # raising thr4 is the only retry direction that cannot manufacture a
-    # pass out of noise (retrying a degraded 1-core level RAISES thr1 and
-    # lowers the efficiency — the honest direction — and is covered by the
-    # degraded branch).
-    # an efficiency ABOVE the box's own measured 1->4 process-scaling
-    # ceiling is not good news — it means the 1-core level ran in a slower
-    # window than the 4-core level and the ratio is inflated. Retrying
-    # local1 can only RAISE the denominator and LOWER the efficiency, so
-    # this retry direction is always honest (the mirror-image of the
-    # gate-miss retry below, which may only raise thr4).
-    eff_cap = (
-        ceiling["ceiling_1_to_4"] + 0.03
-        if ceiling and "ceiling_1_to_4" in ceiling
-        else 1.0
+    medians = {}
+    for cpus, rs in runs.items():
+        thr = [r["urls_per_sec"] for r in rs if r.get("urls_per_sec")]
+        medians[cpus] = statistics.median(thr) if thr else None
+        res[f"local{cpus}"] = {"median_urls_per_sec": medians[cpus], "runs": rs}
+    n, four_n = SCALING_PAIR
+    eff = (
+        round(medians[four_n] / medians[n] / 4.0, 3)
+        if medians[n] and medians[four_n] else None
     )
-
-    extras = gate_retries = 0
-    base = dict(SCALING_LEVELS)
-
-    def retryable(c: int) -> bool:
-        return len(runs[c]) - base[c] < MAX_EXTRA_PER_LEVEL
-
-    while extras < MAX_EXTRA_ATTEMPTS:
-        degraded = [
-            c
-            for c in SCALING_LEVELS
-            if window_ratio(kept(c)) < CLEAN_WINDOW and retryable(c)
-        ]
-        e14 = eff(1, 4)
-        t1, t4 = (kept(c).get("urls_per_sec") for c in (1, 4))
-        if e14 is not None and e14 > eff_cap and retryable(1):
-            target = 1  # implausibly high: the denominator ran degraded
-        elif (
-            t1 and t4 and t4 < LOW_PLAUSIBILITY * t1 and retryable(4)
-        ):
-            # implausibly LOW: 4 cores barely beating 1 core is engine-
-            # throughput evidence of a wave the canary missed — retry this
-            # level BEFORE spending budget on canary-flagged ones
-            target = 4
-        elif degraded:
-            # gate levels (1 and 4 — the north_rule pair) are cleaned FIRST:
-            # the stamped verdict must come from clean windows (r3 VERDICT
-            # #1b); local16 is curve context only
-            gate_degraded = [c for c in degraded if c in (1, 4)]
-            target = min(
-                gate_degraded or degraded, key=lambda c: window_ratio(kept(c))
-            )
-        elif (
-            e14 is not None
-            and e14 < GATE_THRESHOLD
-            and gate_retries < 2
-            and retryable(4)
-        ):
-            target, gate_retries = 4, gate_retries + 1
-        else:
-            break
-        extras += 1
-        attempt(target)
-
-    for cpus in SCALING_LEVELS:
-        res[f"local{cpus}"] = {
-            **kept(cpus),
-            "clean_window": window_ratio(kept(cpus)) >= CLEAN_WINDOW,
-            "all_runs": [
-                {
-                    "wall_s": r.get("wall_s"),
-                    "urls_per_sec": r.get("urls_per_sec"),
-                    "window_canary_urls_per_sec": r.get("window_canary_urls_per_sec"),
-                    "canary_before": r.get("canary_before"),
-                    "canary_after": r.get("canary_after"),
-                }
-                for r in runs[cpus]
-            ],
-        }
-
-    e14, e416 = eff(1, 4), eff(4, 16)
-    res["scaling_efficiency_n_to_4n"] = e14  # primary pair (stable regime)
-    res["scaling_efficiency_4_to_16"] = e416
-    res["canary"] = {
-        "best_urls_per_sec_4proc": round(state["best_canary"], 1),
-        "clean_window_threshold": CLEAN_WINDOW,
-        "levels_clean": all(
-            res[f"local{c}"]["clean_window"] for c in SCALING_LEVELS
-        ),
-    }
+    res["scaling_efficiency_n_to_4n"] = eff
     # the artifact carries its own gate verdict — no prose needed to read it
     res["gate"] = {
         "rule": f"scaling_efficiency_n_to_4n >= {GATE_THRESHOLD} (north_rule)",
-        "value": e14,
-        "verdict": "PASS" if (e14 is not None and e14 >= GATE_THRESHOLD) else "FAIL",
-        # the two levels the verdict is computed FROM must both have run in
-        # clean canary windows, or the number is about the box, not the
-        # engine (r3 VERDICT: the stamped PASS was measured on two levels
-        # flagged clean_window:false while the clean pass lived in prose)
-        "gate_levels_clean": all(
-            res[f"local{c}"]["clean_window"] for c in (1, 4)
-        ),
-        # an efficiency above the box's own 1->4 ceiling means the 1-core
-        # level ran in a slower window (inflated ratio); the retry loop
-        # spends attempts pushing it back under before anything else
-        "plausibility_cap_from_ceiling": round(eff_cap, 3),
-        "within_plausibility_cap": e14 is not None and e14 <= eff_cap,
+        "value": eff,
+        "verdict": "PASS" if (eff is not None and eff >= GATE_THRESHOLD) else "FAIL",
     }
-    # single_box_mp_ceiling is measured by main() BEFORE any Spark JVM runs
-    # in this process tree (r1 ADVICE: measured in-run, not pasted; and the
-    # measurement must not share the box with leftover executors)
     return res
 
 
-#: 480k-URL epochs over the 1M-seed frontier — the production-epoch-size
-#: leg of the scaling story (r4 VERDICT #2c): the ~7 s/epoch job-wave floor
-#: that dominates 120k epochs at 16 cores amortizes away at 4x the epoch,
-#: so THIS pair is the engine's honest 4->16 number; the 120k pair above
-#: stays as the floor-sensitivity context.
-BENCH_SEEDS_1M = "/tmp/spark_graft_bench_seeds_1m.parquet"
-LARGE_EPOCH_ARGS = ["--epochs", "1", "--epoch-duration", "4800",
-                    "--warmup-batch", "5000", "--batch-size", "480000",
-                    "--fetcher", "synthetic", "--seeds", BENCH_SEEDS_1M]
-
-
-def run_large_epoch() -> dict:
-    if not os.path.exists(BENCH_SEEDS_1M):
-        from etherscan_contract_crawler_spark.sources.synthetic import gen_seed_parquet
-
-        gen_seed_parquet(BENCH_SEEDS_1M, 1_000_000, n_domains=8_000)
-    repo = os.path.dirname(os.path.abspath(__file__)) or "."
-    runs: dict[int, list] = {4: [], 16: []}
-    best_canary = 0.0
-
-    def attempt(cpus: int) -> dict:
-        nonlocal best_canary
-        before = quick_canary()
-        cmd = [sys.executable, "-m", "etherscan_contract_crawler_spark.bench_crawl",
-               "--cpus", str(cpus), *LARGE_EPOCH_ARGS]
-        try:
-            p = subprocess.run(cmd, capture_output=True, text=True,
-                               timeout=1500, cwd=repo)
-            line = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
-            r = json.loads(line[-1]) if line else {"error": p.stderr[-300:]}
-        except subprocess.TimeoutExpired:
-            r = {"error": "timeout"}
-        after = quick_canary()
-        r["window_canary_urls_per_sec"] = round(min(before, after), 1)
-        best_canary = max(best_canary, r["window_canary_urls_per_sec"])
-        runs[cpus].append(r)
-        return r
-
-    def kept(cpus: int) -> dict:
-        ok = [r for r in runs[cpus] if "urls_per_sec" in r]
-        if not ok:
-            return runs[cpus][-1]
-        clean = [
-            r for r in ok
-            if not best_canary
-            or r["window_canary_urls_per_sec"] / best_canary >= CLEAN_WINDOW
-        ]
-        return max(clean or ok, key=lambda r: r["urls_per_sec"])
-
-    for cpus in (4, 16):
-        attempt(cpus)
-    # bounded retry: chase one clean window per level (the 480k leg is too
-    # expensive for the full retry budget of the 120k machinery)
-    for _ in range(2):
-        dirty = [
-            c for c in (4, 16)
-            if best_canary
-            and kept(c).get("window_canary_urls_per_sec", 0) / best_canary
-            < CLEAN_WINDOW
-        ]
-        if not dirty:
-            break
-        attempt(dirty[0])
-    out: dict = {"batch_size": 480000, "seeds": "1M"}
-    for c in (4, 16):
-        k = kept(c)
-        out[f"local{c}"] = {
-            kk: k.get(kk)
-            for kk in ("urls", "wall_s", "urls_per_sec",
-                       "window_canary_urls_per_sec")
-        }
-        out[f"local{c}"]["clean_window"] = bool(
-            best_canary
-            and k.get("window_canary_urls_per_sec", 0) / best_canary
-            >= CLEAN_WINDOW
-        )
-        out[f"local{c}"]["n_runs"] = len(runs[c])
-    try:
-        out["scaling_efficiency_4_to_16_480k"] = round(
-            kept(16)["urls_per_sec"] / kept(4)["urls_per_sec"] / 4.0, 3
-        )
-    except Exception:
-        out["scaling_efficiency_4_to_16_480k"] = None
-    return out
-
-
-def run_loop() -> dict:
-    """Full streaming->batch loop probe (r3 VERDICT #6): the 250k-seed bench
-    frontier PLUS a streamed block of 5k discoveries drained through the
-    monitor face before every epoch, 3 epochs at 16 cores. Guards the
-    discovery->frontier->schedule->land handoff against regressing while the
-    batch engine gets faster. Reported per-epoch, not as a throughput gate."""
-    repo = os.path.dirname(os.path.abspath(__file__)) or "."
-    cmd = [
-        sys.executable, "-m", "etherscan_contract_crawler_spark.bench_crawl",
-        "--cpus", "16", "--epochs", "3", "--epoch-duration", "1200",
-        "--batch-size", "40000", "--fetcher", "synthetic",
-        "--seeds", BENCH_SEEDS, "--warmup-batch", "5000",
-        "--loop-discoveries", "5000",
-    ]
-    try:
-        p = subprocess.run(cmd, capture_output=True, text=True, timeout=1200, cwd=repo)
-        line = [ln for ln in p.stdout.splitlines() if ln.startswith("{")]
-        return json.loads(line[-1]) if line else {"error": p.stderr[-500:]}
-    except subprocess.TimeoutExpired:
-        return {"error": "timeout"}
-
-
 def _compact_scaling(crawl: dict) -> dict:
-    """The stdout summary the driver tail-captures must stay well under ~2 KB
-    (BENCH_r03.json shipped parsed:null because the full detail outgrew the
-    driver's tail window) — keep best-per-level + gate + canary + loop walls;
-    everything else lives in BENCH_DETAIL.json."""
-    if not crawl:
-        return {}
-    out = {}
-    for k, v in crawl.items():
-        if k.startswith("local") and isinstance(v, dict):
-            out[k] = {
-                kk: v.get(kk)
-                for kk in ("cpus", "urls", "wall_s", "urls_per_sec", "clean_window")
-            }
-            out[k]["n_runs"] = len(v.get("all_runs", []))
-        elif k == "single_box_mp_ceiling":
-            out[k] = {
-                kk: v.get(kk) for kk in ("ceiling_1_to_4", "ceiling_4_to_16",
-                                         "urls_per_sec_4proc")
-            }
-        elif k == "loop":
-            out[k] = {
-                kk: v.get(kk)
-                for kk in ("urls", "wall_s", "epoch_walls_s", "discovery_walls_s",
-                           "discoveries_per_epoch", "error")
-                if kk in v
-            }
-        elif k == "large_epoch_480k":
-            out[k] = {"eff_4_to_16": v.get("scaling_efficiency_4_to_16_480k")}
-            for lvl in ("local4", "local16"):
-                lv = v.get(lvl, {})
-                out[k][lvl] = {
-                    kk: lv.get(kk)
-                    for kk in ("urls_per_sec", "wall_s", "clean_window")
-                }
-        else:
-            out[k] = v
-    return out
+    """The scaling block of the stdout summary: per level the median and
+    each run's URLs/s (a failed run shows as null); run detail lives in
+    BENCH_DETAIL.json."""
+    return {
+        k: (
+            {"median_urls_per_sec": v["median_urls_per_sec"],
+             "urls_per_sec": [r.get("urls_per_sec") for r in v["runs"]]}
+            if k.startswith("local") else v
+        )
+        for k, v in crawl.items()
+    }
 
 
 #: the driver keeps only the LAST 2,000 bytes of stdout (measured: every
@@ -633,9 +253,9 @@ DRIVER_TAIL_BYTES = 1900
 
 def tail_safe(summary: dict) -> dict:
     """Shrink the stdout summary until it fits the driver's tail window.
-    Per-query timings are dropped first (they live in BENCH_DETAIL.json,
-    committed alongside); the crawl_scaling gate — the north_rule evidence —
-    is never dropped."""
+    Per-query timings are dropped (they live in BENCH_DETAIL.json, committed
+    alongside); the crawl_scaling block is a few hundred bytes and always
+    kept whole."""
     line = json.dumps(summary)
     if len(line) <= DRIVER_TAIL_BYTES:
         return summary
@@ -646,39 +266,13 @@ def tail_safe(summary: dict) -> dict:
         keep -= 5
         summary["queries"] = dict(items[: max(keep, 0)])
         line = json.dumps(summary)
-    if len(line) > DRIVER_TAIL_BYTES:  # scaling detail alone overflows
-        cs = summary.get("crawl_scaling", {})
-        summary["crawl_scaling"] = {
-            k: cs[k]
-            for k in ("gate", "scaling_efficiency_n_to_4n",
-                      "scaling_efficiency_4_to_16", "canary")
-            if k in cs
-        }
     return summary
 
 
 def main():
     t0 = time.time()
-    # hardware ceiling FIRST, before any Spark JVM exists in this process
-    # tree — timing runs must be the only load on the box (BASELINE.md)
-    ceiling = None if SKIP_SCALING else measure_mp_ceiling()
-    if SCALING_ONLY:
-        detail = os.path.join(
-            os.path.dirname(os.path.abspath(__file__)) or ".", "BENCH_DETAIL.json"
-        )
-        try:
-            with open(detail) as f:
-                queries = json.load(f).get("queries", {})
-        except Exception:
-            queries = {}
-    else:
-        queries = run_queries()
-    crawl = {} if SKIP_SCALING else run_scaling(ceiling)
-    if ceiling is not None:
-        crawl["single_box_mp_ceiling"] = ceiling
-    if not SKIP_SCALING:
-        crawl["large_epoch_480k"] = run_large_epoch()
-        crawl["loop"] = run_loop()
+    queries = run_queries()
+    crawl = {} if SKIP_SCALING else run_scaling()
     total = round(time.time() - t0, 2)
     summary = {
         "metric": "bench_total_wall",
@@ -689,10 +283,9 @@ def main():
         "crawl_scaling": _compact_scaling(crawl),
         "detail_file": "BENCH_DETAIL.json",
     }
-    # committed side artifacts from the round's long-form runs (sf1 stress
-    # sweep: tools/bench_sf1.py; standalone-cluster pair:
-    # tools/standalone_bench.sh) — merged compactly so the driver-visible
-    # line carries their headline verdicts without re-running them here
+    # the committed sf1 stress sweep (tools/bench_sf1.py) — merged compactly
+    # so the driver-visible line carries its headline verdict without
+    # re-running it here
     repo_dir = os.path.dirname(os.path.abspath(__file__)) or "."
     try:
         with open(os.path.join(repo_dir, "BENCH_SF1.json")) as f:
@@ -707,24 +300,10 @@ def main():
         }
     except Exception:
         pass
-    try:
-        with open(os.path.join(repo_dir, "BENCH_STANDALONE.json")) as f:
-            st = json.load(f)
-        summary["standalone"] = {
-            k: st.get(k)
-            for k in ("urls_per_sec_2exec", "urls_per_sec_8exec",
-                      "scaling_efficiency_n_to_4n", "batch_size")
-            if k in st
-        }
-    except Exception:
-        pass
-    # full per-run detail (all_runs, ceiling method, loop stderr) — committed
-    # alongside, so per-query timings + every attempt survive even if the
-    # driver's tail capture clips stdout
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)) or ".", "BENCH_DETAIL.json"
-    )
-    with open(detail_path, "w") as f:
+    # full per-run detail (every run of both levels, stderr of failed ones) —
+    # committed alongside, so per-query timings and every run survive even if
+    # the driver's tail capture clips stdout
+    with open(os.path.join(repo_dir, "BENCH_DETAIL.json"), "w") as f:
         json.dump({**summary, "crawl_scaling": crawl}, f, indent=1)
     print(json.dumps(tail_safe(summary)))
 

@@ -10,8 +10,8 @@ gets its own JVM (``local[N]`` is fixed at session creation):
 
 Fetcher modes:
   ``synthetic`` — full image synthesis + decode/PSNR/phash validation; the
-      payload pipeline is CPU/memory-bound (the sandbox's hardest case —
-      its single-box 4->16-proc scaling ceiling is ~0.83, see BASELINE.md).
+      payload pipeline is CPU/memory-bound (the sandbox's hardest case,
+      see BASELINE.md).
   ``simio``     — models the PRODUCTION fetch profile: a crawler at scale is
       network-bound, each worker multiplexing hundreds of connections, so
       per-URL worker cost is latency/concurrency of *waiting*, not CPU.
@@ -100,20 +100,6 @@ def main() -> None:
     ap.add_argument("--n-buckets", type=int, default=64)
     ap.add_argument("--fetcher", choices=["null", "synthetic", "simio"], default="null")
     ap.add_argument("--warmup-batch", type=int, default=0)
-    ap.add_argument("--no-bloom", action="store_true")
-    ap.add_argument(
-        "--timings", action="store_true",
-        help="print per-epoch phase walls to stderr (schedule/fetch/commits/bloom)",
-    )
-    ap.add_argument(
-        "--loop-discoveries", type=int, default=0,
-        help="full-loop probe: before each timed epoch, stream a block of N "
-        "freshly discovered addresses through the monitor face "
-        "(blockstream DataSource -> watermarked dedup -> frontier append) "
-        "so the epoch crawls a frontier that GREW mid-run — guards the "
-        "streaming->batch handoff against regressing while the batch "
-        "engine gets faster (r3 VERDICT #6)",
-    )
     args = ap.parse_args()
 
     from .engine.crawl import CrawlEngine, EngineConfig
@@ -144,8 +130,6 @@ def main() -> None:
             n_buckets=args.n_buckets,
             epoch_duration_s=args.epoch_duration,
             batch_size=args.batch_size,
-            use_bloom=not args.no_bloom,
-            extra={"timings": True} if args.timings else {},
         ),
         fetch_session_factory=fetcher,
     )
@@ -165,60 +149,11 @@ def main() -> None:
         eng.cfg.batch_size = args.batch_size
         first_epoch = 1
 
-    loop_chain = loop_ckpt = loop_seen = None
-    disc_walls: list[float] = []
-    epoch_walls: list[float] = []
-    if args.loop_discoveries:
-        from .storage.icetable import SnapshotTable
-        from .streaming.continuous import DISCOVERED_SEEN_DDL
-
-        loop_chain = os.path.join(warehouse, "chain")
-        loop_ckpt = os.path.join(warehouse, "stream_ckpt")
-        loop_seen = SnapshotTable(os.path.join(warehouse, "discovered_seen"))
-        loop_seen.create(DISCOVERED_SEEN_DDL)
-
-    def _stream_discoveries(e: int) -> None:
-        """One streamed block of deterministic discoveries (~2% of them
-        re-discoveries of the previous block, exercising both dedup tiers),
-        drained into the frontier via the real streaming face."""
-        import hashlib
-
-        from .sources.blockstream import write_block_file
-        from .streaming.continuous import run_discovery_to_frontier
-
-        txs = []
-        for i in range(args.loop_discoveries):
-            a = "0x" + hashlib.sha1(f"disc{e}:{i}".encode()).hexdigest()[:40]
-            if i % 3 == 0:
-                txs.append({"tx_hash": f"0xc{e}_{i}", "to_addr": None, "created_contract": a})
-            else:
-                txs.append({"tx_hash": f"0xl{e}_{i}", "to_addr": a, "code_present": True})
-        if e > first_epoch:
-            for i in range(max(1, args.loop_discoveries // 50)):
-                a = "0x" + hashlib.sha1(f"disc{e - 1}:{i}".encode()).hexdigest()[:40]
-                txs.append({"tx_hash": f"0xr{e}_{i}", "to_addr": a, "code_present": True})
-        write_block_file(loop_chain, e, f"2024-01-01T{12 + e // 60:02d}:{e % 60:02d}:00", txs)
-        q = run_discovery_to_frontier(
-            spark, loop_chain, loop_ckpt, eng.frontier, loop_seen,
-            n_buckets=args.n_buckets, epoch=e,
-        )
-        q.awaitTermination(600)
-
     t0 = time.time()
     total = 0
     for e in range(first_epoch, first_epoch + args.epochs):
-        if args.loop_discoveries:
-            td = time.time()
-            _stream_discoveries(e)
-            disc_walls.append(round(time.time() - td, 2))
-        te = time.time()
         s = eng.run_epoch(e)
-        epoch_walls.append(round(time.time() - te, 2))
         total += s.get("scheduled", 0)
-        if args.timings and s.get("timings"):
-            import sys
-
-            print(f"epoch {e} timings: {s['timings']}", file=sys.stderr)
         if s.get("done"):
             break
     wall = time.time() - t0
@@ -229,10 +164,6 @@ def main() -> None:
         "wall_s": round(wall, 2),
         "urls_per_sec": round(total / wall, 1) if wall > 0 else None,
     }
-    if args.loop_discoveries:
-        out["epoch_walls_s"] = epoch_walls
-        out["discovery_walls_s"] = disc_walls
-        out["discoveries_per_epoch"] = args.loop_discoveries
     print(json.dumps(out))
 
 

@@ -29,7 +29,7 @@ from __future__ import annotations
 
 import os
 import shutil
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -62,7 +62,6 @@ class EngineConfig:
     n_buckets: int = 32
     epoch_duration_s: int = 60
     batch_size: int | None = None
-    use_bloom: bool = True
     expand_links: bool = False
     max_retries: int = 3
     bloom_bits_per_key: int = 12
@@ -73,7 +72,6 @@ class EngineConfig:
     #: metadata-table compaction/expiry cadence (epochs); bounds manifest and
     #: data-dir accretion (Iceberg rewrite_data_files/expire_snapshots analog)
     compact_every: int = 16
-    extra: dict = field(default_factory=dict)
 
 
 class CrawlEngine:
@@ -145,9 +143,8 @@ class CrawlEngine:
         # keys re-admitted). Degrade to the exact anti-join for one epoch —
         # always correct — and let build_delta's full-rebuild fallback heal.
         v = self._bloom_version()
-        expected = self.last_completed_epoch() + 1
-        store = self.segments if (self.cfg.use_bloom and v == expected and v is not None) else None
-        if store is not None:
+        store = None
+        if v is not None and v == self.last_completed_epoch() + 1:
             # cost gate (both answers are exact — this only picks the plan):
             # the store probe pays an Arrow-into-Python tax per CANDIDATE;
             # the anti-join pays a scan/shuffle over the whole SEEN side.
@@ -157,19 +154,17 @@ class CrawlEngine:
             # Counts come from parquet footers — no job.
             seen_total = self.url_seen.row_count()
             cand_total = max(1, self.frontier.row_count())
-            if seen_total < STORE_DEDUP_SEEN_RATIO * cand_total:
-                store = None
+            if seen_total >= STORE_DEDUP_SEEN_RATIO * cand_total:
+                store = self.segments
         # frontier appends (expansion) can re-discover a known URL under a new
         # priority — collapse duplicates with the same max-priority/min-url
         # rule as ingest (hash agg, map-side combinable; same shuffle key as
         # the anti-join so AQE reuses the exchange). With a single data dir
         # (bootstrap only, already key-unique) the agg is a no-op — skip the
         # shuffle entirely.
-        if len(self.frontier.manifest()["data_dirs"]) <= 1:
-            return unseen_with_bloom(frontier_df, seen, store, self._bloom_version())
-        return unseen_with_bloom(
-            self._dedup_frontier(frontier_df), seen, store, self._bloom_version()
-        )
+        if len(self.frontier.manifest()["data_dirs"]) > 1:
+            frontier_df = self._dedup_frontier(frontier_df)
+        return unseen_with_bloom(frontier_df, seen, store, v)
 
     @staticmethod
     def _dedup_frontier(frontier_df: DataFrame) -> DataFrame:
@@ -204,8 +199,8 @@ class CrawlEngine:
 
         cfg = self.cfg
         # scheduled is meta-only (no payload) — cheap to cache; consumed by
-        # the fetch input, the url_seen merge (mark-at-attempt covers the
-        # whole batch), and the parity-order collect
+        # the fetch input and the url_seen merge (mark-at-attempt covers the
+        # whole batch)
         if self._max_capacity is None:
             from ..operators.politeness import max_epoch_capacity
 
@@ -224,15 +219,6 @@ class CrawlEngine:
             topk_state=self._topk_state,
             defer_cap=True,
         ).cache()
-
-        order: list[str] | None = None
-        if self.cfg.extra.get("record_order"):  # parity harness (tests only)
-            from ..operators.politeness import canonical_order
-
-            order = [
-                r.url_sha1
-                for r in scheduled.orderBy(*canonical_order()).select("url_sha1").collect()
-            ]
         _mark("schedule")
 
         # payload landing: ONE job runs fetch -> validate -> partitioned
@@ -336,7 +322,7 @@ class CrawlEngine:
             # epochs leave no disk residue (r1 ADVICE: unbounded raw growth)
             shutil.rmtree(raw_dir, ignore_errors=True)
             scheduled.unpersist()
-            return {"epoch": epoch, "scheduled": 0, "done": True}
+            return {"epoch": epoch, "scheduled": 0, "done": True, "timings": timings}
         n_ok = sum(r["n"] for r in stat_rows if r["status"] == "ok")
         n_failed = sum(r["n"] for r in stat_rows if r["status"] != "ok")
         part_stats: dict[int, dict] = {}
@@ -449,8 +435,6 @@ class CrawlEngine:
             self.url_seen.read(self.spark)
             .select("url_sha1", "domain_hash")
             .unionByName(scheduled.select("url_sha1", "domain_hash"))
-            if cfg.use_bloom
-            else None
         )
         prev = self._bloom_version()
 
@@ -479,15 +463,14 @@ class CrawlEngine:
         with ThreadPoolExecutor(max_workers=3) as pool:
             f_dead = pool.submit(_dead_letter_task)
             f_seen = pool.submit(_seen_write_task)
-            f_bloom = pool.submit(_bloom_task) if cfg.use_bloom else None
+            f_bloom = pool.submit(_bloom_task)
             n_failed_new = f_dead.result()  # noqa: F841 — ordering barrier
             seen_sid, seen_dir, _ = f_seen.result()
             _mark("dead_letter_merge")
             # epoch-completion marker: ordered after the dead-letter commit
             self.url_seen.commit_append(seen_sid, seen_dir, lineage=lineage)
             _mark("url_seen_merge")
-            if f_bloom is not None:
-                f_bloom.result()
+            f_bloom.result()
         _mark("bloom_build")
 
         if cfg.expand_links:
@@ -500,19 +483,15 @@ class CrawlEngine:
             self._expand_frontier(ok_rows, epoch)
 
         scheduled.unpersist()
-        stats = {
+        return {
             "epoch": epoch,
             "scheduled": n_scheduled,
             "ok": n_ok,
             "images_inserted": n_images,
             "failed": n_failed,
             "done": False,
+            "timings": timings,
         }
-        if order is not None:
-            stats["order"] = order
-        if self.cfg.extra.get("timings"):
-            stats["timings"] = timings
-        return stats
 
     def _expand_frontier(self, ok_rows: DataFrame, epoch: int) -> None:
         """M5 — deterministic synthetic link discovery: fetched pages whose

@@ -146,6 +146,28 @@ def _sorted_contains(sorted_keys: np.ndarray, keys: np.ndarray) -> np.ndarray:
     return (pos < len(sorted_keys)) & (np.asarray(sorted_keys[pos_c]) == keys)
 
 
+def _write_segment(
+    build_dir: str, name: str, sha1_hex: pd.Series, bits_per_key: int, n_hashes: int
+) -> int:
+    """Write one segment file pair into ``build_dir``: a bloom sized for
+    ``sha1_hex`` as ``name`` (.npz) and the sorted digests beside it
+    (.keys.npy), each saved under a task-unique tmp name and renamed into
+    place. Returns the key count."""
+    n = len(sha1_hex)
+    m, k = _bloom_params(n, bits_per_key, n_hashes)
+    bitmap = np.zeros((m + 7) // 8, dtype=np.uint8)
+    _bloom_insert(bitmap, m, k, *_h1h2(sha1_hex))
+    path = os.path.join(build_dir, name)
+    kpath = os.path.join(build_dir, SegmentStore._keys_name(name))
+    # tmp names keep the final suffix: np.savez/np.save append one otherwise
+    tmp, ktmp = (f"{p[:-4]}.tmp{os.getpid()}{p[-4:]}" for p in (path, kpath))
+    np.savez_compressed(tmp, bitmap=bitmap, m=np.int64(m), k=np.int64(k), n=np.int64(n))
+    os.replace(tmp, path)
+    np.save(ktmp, np.sort(_keys20(sha1_hex)))
+    os.replace(ktmp, kpath)
+    return n
+
+
 class SegmentStore:
     """Filesystem-backed, versioned membership segments (see module doc).
 
@@ -353,27 +375,13 @@ class SegmentStore:
         self, build_dir: str, seen: DataFrame, n_sub: dict[int, int]
     ) -> list[tuple[int, int, int]]:
         bits_per_key, n_hashes = self.bits_per_key, self.n_hashes
-        base_name, keys_name = self._base_name, self._keys_name
+        base_name = self._base_name
 
         def build_segment(pdf: pd.DataFrame) -> pd.DataFrame:
             bucket, sub = int(pdf["domain_hash"].iloc[0]), int(pdf["_sub"].iloc[0])
-            n = len(pdf)
-            m, k = _bloom_params(n, bits_per_key, n_hashes)
-            h1, h2 = _h1h2(pdf["url_sha1"])
-            bitmap = np.zeros((m + 7) // 8, dtype=np.uint8)
-            _bloom_insert(bitmap, m, k, h1, h2)
-            name = base_name(bucket, sub)
-            path = os.path.join(build_dir, name)
-            # savez appends '.npz' unless the name already ends with it
-            tmp = path + f".tmp{os.getpid()}.npz"
-            np.savez_compressed(
-                tmp, bitmap=bitmap, m=np.int64(m), k=np.int64(k), n=np.int64(n)
+            n = _write_segment(
+                build_dir, base_name(bucket, sub), pdf["url_sha1"], bits_per_key, n_hashes
             )
-            os.replace(tmp, path)
-            kpath = os.path.join(build_dir, keys_name(name))
-            ktmp = kpath + f".tmp{os.getpid()}.npy"
-            np.save(ktmp, np.sort(_keys20(pdf["url_sha1"])))
-            os.replace(ktmp + ".npy" if not ktmp.endswith(".npy") else ktmp, kpath)
             return pd.DataFrame({"domain_hash": [bucket], "_sub": [sub], "n_keys": [n]})
 
         rows = (
@@ -418,7 +426,7 @@ class SegmentStore:
         os.makedirs(build_dir, exist_ok=True)
 
         bits_per_key, n_hashes = self.bits_per_key, self.n_hashes
-        base_name, run_name, keys_name = self._base_name, self._run_name, self._keys_name
+        base_name, run_name = self._base_name, self._run_name
         max_runs, target_keys = self.MAX_RUNS, self.target_keys
 
         if delta_counts is None:
@@ -436,7 +444,6 @@ class SegmentStore:
         def delta_segment(pdf: pd.DataFrame) -> pd.DataFrame:
             bucket, sub = int(pdf["domain_hash"].iloc[0]), int(pdf["_sub"].iloc[0])
             ent = bc_segments.value.get(f"{bucket}_{sub}")
-            h1, h2 = _h1h2(pdf["url_sha1"])
             n_new = len(pdf)
             if ent is not None:
                 # fold trigger from manifest counts alone — no file opens
@@ -446,9 +453,6 @@ class SegmentStore:
                         {"domain_hash": [bucket], "n_new": [n_new],
                          "rebuilt": [True], "_sub": [sub]}
                     )
-            m, k = _bloom_params(n_new, bits_per_key, n_hashes)
-            bitmap = np.zeros((m + 7) // 8, dtype=np.uint8)
-            _bloom_insert(bitmap, m, k, h1, h2)
             # brand-new segment: fresh base from the delta alone; otherwise
             # run index = len(prev runs): deterministic, so the driver
             # derives the same name for the manifest without a return trip
@@ -456,15 +460,7 @@ class SegmentStore:
                 base_name(bucket, sub) if ent is None
                 else run_name(bucket, sub, len(ent["runs"]))
             )
-            path = os.path.join(build_dir, name)
-            tmp = path + f".tmp{os.getpid()}.npz"
-            np.savez_compressed(
-                tmp, bitmap=bitmap, m=np.int64(m), k=np.int64(k), n=np.int64(n_new)
-            )
-            os.replace(tmp, path)
-            kpath = os.path.join(build_dir, keys_name(name))
-            np.save(kpath + f".tmp{os.getpid()}.npy", np.sort(_keys20(pdf["url_sha1"])))
-            os.replace(kpath + f".tmp{os.getpid()}.npy", kpath)
+            _write_segment(build_dir, name, pdf["url_sha1"], bits_per_key, n_hashes)
             return pd.DataFrame(
                 {"domain_hash": [bucket], "n_new": [n_new], "rebuilt": [False], "_sub": [sub]}
             )

@@ -44,8 +44,9 @@ def unseen_with_bloom(
     store: SegmentStore | None,
     version: int | None,
 ) -> DataFrame:
-    """Store-accelerated J1 (falls back to the exact join when it must)."""
-    if store is None or version is None or version not in store.versions():
+    """Store-accelerated J1: probes published store ``version`` (the caller
+    has checked it is current); the exact join when there is no store."""
+    if store is None or version is None:
         return anti_join_seen(candidates, seen)
     cols = candidates.columns  # the USING join moves the key column first
     # probe a 2-column PROJECTION, not the full rows: the probe's cost is

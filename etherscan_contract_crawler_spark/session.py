@@ -50,10 +50,9 @@ def get_spark(
     gc_opts = (
         f"-XX:+UseParallelGC -XX:ParallelGCThreads={min(cpus, 8)} -Xmn2g"
     )
-    # SPARK_GRAFT_MASTER overrides local[N] — used for the standalone-mode
-    # scaling evidence (spark://host:7077, real multi-process executors with
-    # network shuffle on the same box; r4 VERDICT #6). `cpus` then means
-    # TOTAL cores requested from the cluster (spark.cores.max) and the
+    # SPARK_GRAFT_MASTER overrides local[N] — a deployment setting: point
+    # the session at a cluster master (e.g. spark://host:7077). `cpus` then
+    # means TOTAL cores requested from the cluster (spark.cores.max) and the
     # executor JVMs get the same throughput-GC flags as the local driver.
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
     builder = (

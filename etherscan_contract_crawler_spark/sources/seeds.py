@@ -61,11 +61,16 @@ def seeds_to_frontier(
             F.min("url_canon").alias("url_canon"),
             F.max("priority").alias("priority"),
         )
+        # the host gets its own projection: inlined into every public-suffix
+        # sub-expression of registrable_domain, its regex chain grows the
+        # generated class past the JVM's 64 KB method limit, and the whole
+        # stage falls back to interpreted evaluation
+        .withColumn("_host", F.nullif(U.url_host(F.col("url_canon")), F.lit("")))
         .select(
             "url",
             "url_canon",
             "url_sha1",
-            U.registrable_domain(F.col("url_canon")).alias("domain"),
+            U.registrable_domain(F.col("_host"), is_host=True).alias("domain"),
             F.lit(None).cast("int").alias("domain_hash"),
             "priority",
             F.lit(0).alias("depth"),

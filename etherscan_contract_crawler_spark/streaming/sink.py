@@ -10,6 +10,8 @@ here, keyed by its own column (``address`` / ``url``):
         frontier.append(to_frontier(fresh))        (skipped if already landed)
         seen.append(fresh.select(key))             (mark-at-schedule, like the
                                                     reference :85-86)
+    both appends are skipped when ``fresh`` is empty (the no-data batch an
+    availableNow drain runs to advance the watermark lands nothing)
 
 Append, not merge: ``fresh`` is unseen and key-unique by construction, so a
 merge's existing-side anti-join would re-scan the seen table to verify a
@@ -62,9 +64,12 @@ def land_to_frontier(
             .join(seen.read(batch.sparkSession).select(key), key, "left_anti")
             .cache()
         )
-        if frontier.lineage().get(guard) != batch_id:
-            frontier.append(to_frontier(fresh), lineage={guard: batch_id})
-        seen.append(fresh.select(key), lineage={guard: batch_id})
+        # count() runs every partition of the batch (isEmpty() may stop after
+        # one), which the stateful plan's state-store commit needs
+        if fresh.count():
+            if frontier.lineage().get(guard) != batch_id:
+                frontier.append(to_frontier(fresh), lineage={guard: batch_id})
+            seen.append(fresh.select(key), lineage={guard: batch_id})
         fresh.unpersist()
 
     return (

@@ -19,7 +19,28 @@ def _bench():
     return m
 
 
-def _summary(n_queries: int) -> dict:
+def _scaling_detail() -> dict:
+    """A run_scaling() result: three runs per level, one of them failed
+    with a long stderr tail (detail only — the compact block drops it)."""
+    def run(thr):
+        if thr is None:
+            return {"error": "x" * 500}
+        return {"cpus": 1, "urls": 120000, "wall_s": round(120000 / thr, 2),
+                "urls_per_sec": thr}
+
+    return {
+        "harness": "spark-submit --py-files",
+        "local1": {"median_urls_per_sec": 738.4,
+                   "runs": [run(738.4), run(722.9), run(741.3)]},
+        "local4": {"median_urls_per_sec": 2689.35,
+                   "runs": [run(2727.7), run(2651.0), run(None)]},
+        "scaling_efficiency_n_to_4n": 0.911,
+        "gate": {"rule": "scaling_efficiency_n_to_4n >= 0.8 (north_rule)",
+                 "value": 0.911, "verdict": "PASS"},
+    }
+
+
+def _summary(m, n_queries: int) -> dict:
     return {
         "metric": "bench_total_wall",
         "value": 804.65,
@@ -27,50 +48,27 @@ def _summary(n_queries: int) -> dict:
         "queries": {f"query_name_number_{i:03d}": round(i * 0.37, 2)
                     for i in range(n_queries)},
         "sf": 0.1,
-        "crawl_scaling": {
-            "harness": "spark-submit --py-files",
-            "local1": {"cpus": 1, "urls": 120000, "wall_s": 162.51,
-                       "urls_per_sec": 738.4, "clean_window": True, "n_runs": 1},
-            "local4": {"cpus": 4, "urls": 120000, "wall_s": 43.99,
-                       "urls_per_sec": 2727.7, "clean_window": True, "n_runs": 2},
-            "local16": {"cpus": 16, "urls": 120000, "wall_s": 18.84,
-                        "urls_per_sec": 6368.1, "clean_window": True, "n_runs": 2},
-            "scaling_efficiency_n_to_4n": 0.924,
-            "scaling_efficiency_4_to_16": 0.584,
-            "canary": {"best_urls_per_sec_4proc": 3573.4,
-                       "clean_window_threshold": 0.85, "levels_clean": True},
-            "gate": {"rule": "scaling_efficiency_n_to_4n >= 0.8 (north_rule)",
-                     "value": 0.924, "verdict": "PASS",
-                     "gate_levels_clean": True,
-                     "plausibility_cap_from_ceiling": 1.084,
-                     "within_plausibility_cap": True},
-            "single_box_mp_ceiling": {"ceiling_1_to_4": 1.054,
-                                      "ceiling_4_to_16": 0.825,
-                                      "urls_per_sec_4proc": 3984.1},
-            "loop": {"urls": 120000, "wall_s": 153.29,
-                     "epoch_walls_s": [32.63, 48.29, 29.16],
-                     "discovery_walls_s": [22.91, 11.58, 8.72],
-                     "discoveries_per_epoch": 5000},
-        },
+        "crawl_scaling": m._compact_scaling(_scaling_detail()),
         "detail_file": "BENCH_DETAIL.json",
     }
 
 
 def test_small_summary_untouched():
     m = _bench()
-    s = _summary(5)
+    s = _summary(m, 5)
     assert m.tail_safe(s) == s
 
 
 def test_fits_driver_window_at_every_query_count():
     m = _bench()
-    for n in (25, 70, 132, 500):
-        line = json.dumps(m.tail_safe(_summary(n)))
+    for n in (25, 70, 132, 185, 500):
+        line = json.dumps(m.tail_safe(_summary(m, n)))
         assert len(line) <= m.DRIVER_TAIL_BYTES, (n, len(line))
         got = json.loads(line)  # the driver can parse the whole line
         # the north_rule gate is never dropped
         assert got["crawl_scaling"]["gate"]["verdict"] == "PASS"
-        assert got["crawl_scaling"]["gate"]["gate_levels_clean"] is True
+        assert got["crawl_scaling"] == _summary(m, n)["crawl_scaling"]
+        assert got["crawl_scaling"]["local4"]["urls_per_sec"] == [2727.7, 2651.0, None]
         if n > 30:
             assert got["queries_truncated_see_detail_file"] is True
             assert got["detail_file"] == "BENCH_DETAIL.json"
@@ -78,7 +76,7 @@ def test_fits_driver_window_at_every_query_count():
 
 def test_input_not_mutated():
     m = _bench()
-    s = _summary(200)
+    s = _summary(m, 200)
     before = json.dumps(s)
     m.tail_safe(s)
     assert json.dumps(s) == before

@@ -9,44 +9,60 @@ import pytest
 
 from etherscan_contract_crawler_spark.engine import crawl
 from etherscan_contract_crawler_spark.engine.crawl import CrawlEngine, EngineConfig
+from etherscan_contract_crawler_spark.operators.politeness import canonical_order
 from etherscan_contract_crawler_spark.oracle.reference_oracle import run_oracle
 
 
-def _run_engine(spark, seeds_df, tmp_path, **cfg_kw):
+def _schedule_orders(monkeypatch) -> list[list[str]]:
+    """Wrap the engine's schedule step: each non-empty schedule's url_sha1
+    sequence in canonical crawl order is appended to the returned list. The
+    schedule is cached first, so the engine fetches exactly the rows read."""
+    orders: list[list[str]] = []
+    real = crawl.schedule_epoch
+
+    def schedule_epoch(*a, **k):
+        scheduled = real(*a, **k).cache()
+        order = [
+            r.url_sha1
+            for r in scheduled.orderBy(*canonical_order()).select("url_sha1").collect()
+        ]
+        if order:
+            orders.append(order)
+        return scheduled
+
+    monkeypatch.setattr(crawl, "schedule_epoch", schedule_epoch)
+    return orders
+
+
+def _run_engine(spark, seeds_df, tmp_path, monkeypatch, **cfg_kw):
+    orders = _schedule_orders(monkeypatch)
     eng = CrawlEngine(
-        spark,
-        EngineConfig(
-            warehouse=str(tmp_path / "wh"),
-            n_buckets=16,
-            extra={"record_order": True},
-            **cfg_kw,
-        ),
+        spark, EngineConfig(warehouse=str(tmp_path / "wh"), n_buckets=16, **cfg_kw)
     )
     eng.bootstrap(seeds_df)
-    stats = eng.run(max_epochs=30)
+    eng.run(max_epochs=30)
     seen = {r.url_sha1 for r in eng.url_seen.read(spark).select("url_sha1").collect()}
     images = {r.image_id for r in eng.images.read(spark).select("image_id").collect()}
     dead = {r.url_sha1 for r in eng.dead_letter.read(spark).select("url_sha1").collect()}
-    orders = [s["order"] for s in stats if "order" in s]
     return eng, orders, seen, images, dead
 
 
 @pytest.mark.parametrize(
-    "use_bloom,gate",
+    "gate",
     [
-        pytest.param(True, "auto", marks=pytest.mark.slow),   # cost gate picks per epoch
-        pytest.param(True, "store", marks=pytest.mark.slow),  # gate at 0: store every epoch
-        (False, "auto"),  # plain exact anti-join — the fast-loop parity leg
+        pytest.param("auto", marks=pytest.mark.slow),   # cost gate picks per epoch
+        pytest.param("store", marks=pytest.mark.slow),  # gate at 0: store every epoch
+        "join",  # gate out of reach: exact anti-join every epoch — the fast-loop leg
     ],
 )
 def test_engine_matches_oracle(
-    spark, tiny_seed_rows, tiny_seeds_df, tmp_path, monkeypatch, use_bloom, gate
+    spark, tiny_seed_rows, tiny_seeds_df, tmp_path, monkeypatch, gate
 ):
-    if gate == "store":
-        monkeypatch.setattr(crawl, "STORE_DEDUP_SEEN_RATIO", 0)
+    if gate != "auto":
+        ratio = 0 if gate == "store" else float("inf")
+        monkeypatch.setattr(crawl, "STORE_DEDUP_SEEN_RATIO", ratio)
     eng, orders, seen, images, dead = _run_engine(
-        spark, tiny_seeds_df, tmp_path, epoch_duration_s=10, batch_size=150,
-        use_bloom=use_bloom,
+        spark, tiny_seeds_df, tmp_path, monkeypatch, epoch_duration_s=10, batch_size=150,
     )
     oracle = run_oracle(
         tiny_seed_rows, epoch_duration_s=10, batch_size=150, max_epochs=30
@@ -58,9 +74,11 @@ def test_engine_matches_oracle(
 
 
 @pytest.mark.slow
-def test_engine_matches_oracle_with_expansion(spark, tiny_seed_rows, tiny_seeds_df, tmp_path):
+def test_engine_matches_oracle_with_expansion(
+    spark, tiny_seed_rows, tiny_seeds_df, tmp_path, monkeypatch
+):
     eng, orders, seen, images, dead = _run_engine(
-        spark, tiny_seeds_df, tmp_path, epoch_duration_s=10, batch_size=120,
+        spark, tiny_seeds_df, tmp_path, monkeypatch, epoch_duration_s=10, batch_size=120,
         expand_links=True,
     )
     oracle = run_oracle(

@@ -155,3 +155,16 @@ def test_one_seen_read_per_micro_batch(spark, tmp_path, monkeypatch):
     batches = {p["batchId"] for p in q.recentProgress}
     assert 0 in batches
     assert len(reads) == len(batches)
+
+
+def test_no_data_batch_lands_nothing(spark, tmp_path):
+    """A drain runs the data batch and a no-data batch that advances the
+    watermark; only the data batch adds a snapshot and a data dir."""
+    frontier, seen = _tables(tmp_path, _Discovery)
+    _Discovery.write_input(spark, tmp_path)
+    q = _Discovery.start(spark, tmp_path, str(tmp_path / "ckpt"), frontier, seen)
+    q.awaitTermination(120)
+    assert len({p["batchId"] for p in q.recentProgress}) >= 2
+    for table in (frontier, seen):
+        assert len(table.snapshot_ids()) == 2  # create + the data batch
+        assert len(table.manifest()["data_dirs"]) == 1
