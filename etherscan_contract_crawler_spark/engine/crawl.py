@@ -8,18 +8,23 @@ One epoch = one deterministic, resumable unit:
                 + inline decode/PSNR/caption validation
                 + partitionBy(valid) columnar write────────────► staged raw dir
     raw(valid=true dir) ──commit_staged (no copy)──────────────► images snapshot
-    raw(failed) ───────────────────────────────────────────────► dead_letter MERGE
-    scheduled ──mark-at-attempt (K5 semantics)─────────────────► url_seen MERGE
+    raw(failed) ──append, minus this epoch's landed dirs───────► dead_letter
+    scheduled ──mark-at-attempt (K5 semantics)─────────────────► url_seen append
                                                                 + lineage commit
     epoch delta ──append LSM run per touched segment───────────► segment store
 
-Commit ordering makes every write idempotent (MERGE not-matched on a key), so
-a crash anywhere mid-epoch resumes cleanly: the url_seen merge carries the
-epoch-completion lineage and is LAST — an epoch is complete iff its lineage
-landed. Reference analog of the checkpoint: `.processed.txt` append+flush per
-address (contract_crawler.py:488-490) with mark-at-attempt semantics; the
-reference's reload of it is broken (SURVEY.md §8 B2) — this engine implements
-the intended durable behavior.
+Per-bucket landed/ok counts are observed on the landing write itself
+(``DataFrame.observe``), not read back from the landed files.
+
+Commit ordering makes every write idempotent, so a crash anywhere mid-epoch
+resumes cleanly: the url_seen append carries the epoch-completion lineage and
+is LAST — an epoch is complete iff its lineage landed. The images and
+dead-letter appends stamp their data dirs with the epoch, and a replay
+anti-joins only the dirs its own crashed attempts left (O(epoch), never
+O(history)). Reference analog of the checkpoint: `.processed.txt`
+append+flush per address (contract_crawler.py:488-490) with mark-at-attempt
+semantics; the reference's reload of it is broken (SURVEY.md §8 B2) — this
+engine implements the intended durable behavior.
 
 Frontier expansion (M5): discovered child URLs append to the frontier as next
 epoch's seeds — the monitor loop's moral equivalent (SURVEY.md §3.3).
@@ -31,7 +36,7 @@ import os
 import shutil
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.bloom import SegmentStore
@@ -111,6 +116,9 @@ class CrawlEngine:
         #: admission rank bound (computed once; budgets are fixed per run)
         self._topk_state: dict = {}
         self._max_capacity: int | None = None
+        #: the newest store version pending() resolved — run_epoch's bloom
+        #: build reuses it instead of listing the store a second time
+        self._store_version: int | None = None
 
     # ---------- bootstrap ----------
     def bootstrap(self, seeds: DataFrame) -> dict:
@@ -142,7 +150,7 @@ class CrawlEngine:
         # that window the stale segments would yield false negatives (seen
         # keys re-admitted). Degrade to the exact anti-join for one epoch —
         # always correct — and let build_delta's full-rebuild fallback heal.
-        v = self._bloom_version()
+        v = self._store_version = self._bloom_version()
         store = None
         if v is not None and v == self.last_completed_epoch() + 1:
             # cost gate (both answers are exact — this only picks the plan):
@@ -185,6 +193,21 @@ class CrawlEngine:
             F.min("discovered_epoch").alias("discovered_epoch"),
         )
 
+    def _epoch_keys(self, table: SnapshotTable, epoch: int, key: str = "url_sha1"):
+        """``key`` (as ``url_sha1``) of the rows ``table`` committed under
+        lineage epoch ``epoch`` — what crashed attempts of a replayed epoch
+        already landed — or None when no data dir carries that stamp. The
+        dir count is bounded by the crash count: O(epoch), never O(history)."""
+        m = table.manifest()
+        dirs = [d for d in m["data_dirs"] if m.get("dir_epochs", {}).get(d) == epoch]
+        if not dirs:
+            return None
+        return (
+            self.spark.read.schema(m["schema_ddl"])
+            .parquet(*dirs)
+            .select(F.col(key).alias("url_sha1"))
+        )
+
     def run_epoch(self, epoch: int) -> dict:
         import time as _time
 
@@ -199,7 +222,7 @@ class CrawlEngine:
 
         cfg = self.cfg
         # scheduled is meta-only (no payload) — cheap to cache; consumed by
-        # the fetch input and the url_seen merge (mark-at-attempt covers the
+        # the fetch input and the url_seen append (mark-at-attempt covers the
         # whole batch)
         if self._max_capacity is None:
             from ..operators.politeness import max_epoch_capacity
@@ -231,30 +254,34 @@ class CrawlEngine:
         # scheduled ⊆ unseen already excludes everything url_seen knows, so
         # the ONLY keys that could double-land are this epoch's own payloads
         # committed in the crash window between images commit and url_seen
-        # merge. The manifest stamps each data dir with its commit epoch, so
+        # append. The manifest stamps each data dir with its commit epoch, so
         # the guard anti-joins the union of ALL dirs this epoch landed — a
         # second crash in the same window commits a second dir, and guarding
         # only the last one would re-land the first replay's payloads
         # (duplicate image_id rows; r2 ADVICE). Dir count is bounded by the
         # crash count, so this stays O(epoch), never O(history).
         to_fetch = scheduled
-        img_manifest = self.images.manifest()
-        epoch_dirs = [
-            d
-            for d in img_manifest["data_dirs"]
-            if img_manifest.get("dir_epochs", {}).get(d) == epoch
-        ]
-        if img_manifest.get("lineage", {}).get("epoch") == epoch and epoch_dirs:
-            landed = (
-                self.spark.read.schema(IMAGES_DDL)
-                .parquet(*epoch_dirs)
-                .select(F.col("image_id").alias("url_sha1"))
-            )
+        landed = self._epoch_keys(self.images, epoch, key="image_id")
+        if landed is not None:
             to_fetch = scheduled.join(landed, "url_sha1", "left_anti")
+
+        # per-bucket landed / ok counts ride the landing write as observed
+        # metrics — no read-back job; bounded by n_buckets, not the batch
+        def per_bucket(cond: str):
+            terms = ", ".join(
+                f"count_if(domain_hash = {b}{cond})" for b in range(cfg.n_buckets)
+            )
+            return F.expr(f"array({terms})")
+
+        counts = Observation()
         results = fetch_batch(
             to_fetch,
             self.fetch_session_factory,
             max_retries=cfg.max_retries,
+        ).observe(
+            counts,
+            per_bucket("").alias("landed"),
+            per_bucket(" AND status = 'ok'").alias("ok"),
         )
         # payload bytes are already codec-compressed — snappy on top only
         # burns CPU and buffers; small row groups cap per-task write buffering
@@ -299,18 +326,23 @@ class CrawlEngine:
             rel.unpersist()
         _mark("fetch_land")
 
-        # stats come from the landed files — column-pruned scan, no refetch.
-        # The schedule's cardinality is derived here too: the write job above
-        # materialized the cache, so no separate pre-fetch count() job runs.
-        stat_rows = (
-            raw.groupBy("domain_hash", "status").agg(F.count("*").alias("n")).collect()
-        )
+        # the schedule's cardinality comes from the observed counts too: the
+        # write job above materialized the cache, so no pre-fetch count() runs
+        observed = counts.get
+        part_stats: dict[int, dict] = {
+            b: {"scheduled": n, "ok": ok, "failed": n - ok}
+            for b, (n, ok) in enumerate(zip(observed["landed"], observed["ok"]))
+            if n
+        }
+        n_landed = sum(p["scheduled"] for p in part_stats.values())
+        n_ok = sum(p["ok"] for p in part_stats.values())
+        n_failed = n_landed - n_ok
         if to_fetch is scheduled:
             # normal path: every scheduled row landed exactly once (ok or
             # failed — fetch_batch's one-row-per-input CONTRACT), so the
-            # landed stats already carry the schedule's cardinality — no
+            # landed counts already carry the schedule's cardinality — no
             # separate count() job wave
-            n_scheduled = sum(int(r["n"]) for r in stat_rows)
+            n_scheduled = n_landed
         else:
             # replay: landed rows ⊂ scheduled (keys whose payloads already
             # committed are skipped by the fetch but still need the
@@ -323,15 +355,6 @@ class CrawlEngine:
             shutil.rmtree(raw_dir, ignore_errors=True)
             scheduled.unpersist()
             return {"epoch": epoch, "scheduled": 0, "done": True, "timings": timings}
-        n_ok = sum(r["n"] for r in stat_rows if r["status"] == "ok")
-        n_failed = sum(r["n"] for r in stat_rows if r["status"] != "ok")
-        part_stats: dict[int, dict] = {}
-        for r in stat_rows:
-            p = part_stats.setdefault(
-                int(r["domain_hash"]), {"scheduled": 0, "ok": 0, "failed": 0}
-            )
-            p["scheduled"] += int(r["n"])
-            p[r["status"] if r["status"] in ("ok", "failed") else "failed"] += int(r["n"])
 
         # lineage epoch on the images commit powers the O(epoch) replay guard
         _, n_images = self.images.commit_staged(
@@ -364,23 +387,32 @@ class CrawlEngine:
         # The three remaining epoch writes touch three independent tables and
         # the already-cached schedule, so their JOBS run concurrently on one
         # thread pool instead of as sequential driver-latency waves:
-        #   - dead-letter merge (anti-join + write on its own table),
+        #   - dead-letter append (on its own table),
         #   - url_seen data write (STAGED — manifest commit deferred),
         #   - bloom delta build (delta path reads only the cached schedule).
         # Crash ordering is preserved where it matters: url_seen's manifest
         # commit — the epoch-completion marker — happens-after the
         # dead-letter commit, so a crash between them replays the epoch
-        # (merge_not_matched is idempotent) instead of marking the batch
-        # seen while its dead letters were never recorded. A bloom version
+        # (the dead-letter append is guarded, below) instead of marking the
+        # batch seen while its dead letters were never recorded. A bloom version
         # that lands without its url_seen commit is already handled by
         # pending()'s version-validity check (degrades to the exact join)
         # and build_delta's full-rebuild fallback on the replay.
         from concurrent.futures import ThreadPoolExecutor
 
+        # APPEND, not MERGE, O(epoch) not O(history): `failed` is key-unique
+        # (one landed row per to_fetch row) and disjoint from every earlier
+        # epoch's dead letters (those keys are in url_seen, so never
+        # scheduled again). Only a crashed attempt of THIS epoch can have
+        # landed some of them already, and its dirs carry this epoch's stamp
+        # — the images replay guard's rule. Resolved here, on this thread.
         failed = raw.filter(F.col("status") == "failed").select(
             "url_sha1", "url", "domain", "domain_hash", "attempts",
             F.lit(epoch).alias("failed_epoch"),
         )
+        dead_landed = self._epoch_keys(self.dead_letter, epoch)
+        if dead_landed is not None:
+            failed = failed.join(dead_landed, "url_sha1", "left_anti")
 
         # FAIR mode alone is not enough: jobs in the DEFAULT pool are FIFO
         # relative to each other (FairSchedulableBuilder builds it with
@@ -396,12 +428,12 @@ class CrawlEngine:
 
         def _dead_letter_task():
             _pool("dead-letter")
-            _, n = self.dead_letter.merge_not_matched(failed, ["url_sha1"])
+            if n_failed:
+                self.dead_letter.append(failed, lineage={"epoch": epoch})
             # the dead-letter rows are committed now — drop the valid=false
             # partition (full uncompressed payload bytes of failed fetches)
             # so the landing dir keeps only the committed valid=true data
             shutil.rmtree(os.path.join(raw_dir, "valid=false"), ignore_errors=True)
-            return n
 
         def _seen_write_task():
             _pool("url-seen")
@@ -436,7 +468,7 @@ class CrawlEngine:
             .select("url_sha1", "domain_hash")
             .unionByName(scheduled.select("url_sha1", "domain_hash"))
         )
-        prev = self._bloom_version()
+        prev = self._store_version
 
         def _bloom_task():
             _pool("bloom")
@@ -464,7 +496,7 @@ class CrawlEngine:
             f_dead = pool.submit(_dead_letter_task)
             f_seen = pool.submit(_seen_write_task)
             f_bloom = pool.submit(_bloom_task)
-            n_failed_new = f_dead.result()  # noqa: F841 — ordering barrier
+            f_dead.result()  # ordering barrier
             seen_sid, seen_dir, _ = f_seen.result()
             _mark("dead_letter_merge")
             # epoch-completion marker: ordered after the dead-letter commit
@@ -476,10 +508,13 @@ class CrawlEngine:
         if cfg.expand_links:
             # expansion derives from the scheduled batch minus dead-lettered
             # keys (not from `results`) so a mid-epoch replay — where landed
-            # keys are skipped by the fetch — still discovers their children
-            ok_rows = scheduled.join(
-                self.dead_letter.read(self.spark).select("url_sha1"), "url_sha1", "left_anti"
-            )
+            # keys are skipped by the fetch — still discovers their children.
+            # Only this epoch's dead letters can meet `scheduled` (the append
+            # above, or a crashed attempt's), never the whole table.
+            ok_rows = scheduled
+            dead = self._epoch_keys(self.dead_letter, epoch)
+            if dead is not None:
+                ok_rows = scheduled.join(dead, "url_sha1", "left_anti")
             self._expand_frontier(ok_rows, epoch)
 
         scheduled.unpersist()
@@ -535,7 +570,9 @@ class CrawlEngine:
         ).withColumn("url_sha1", U.url_sha1(F.col("url_canon"))).withColumn(
             "domain_hash", U.domain_hash(F.col("domain"), self.cfg.n_buckets)
         )
-        self.frontier.append(new_rows.dropDuplicates(["url_sha1"]))
+        # key-unique without a dedup shuffle: a child key is
+        # sha1(parent key ‖ "c1") and the parents are key-unique
+        self.frontier.append(new_rows)
 
     # ---------- maintenance ----------
     def maintain(self, epoch: int, force: bool = False) -> dict:

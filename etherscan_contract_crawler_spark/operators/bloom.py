@@ -75,27 +75,29 @@ import os
 import shutil
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def _h1h2(sha1_hex: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """First two big-endian 64-bit words of each sha1 hex digest — decoded in
-    one C-speed pass (bytes.fromhex on the concatenated column), not per-row
-    Python int(s, 16)."""
-    joined = "".join(sha1_hex.str.slice(0, 32))
-    words = np.frombuffer(bytes.fromhex(joined), dtype=">u8").astype(np.uint64)
-    h1 = words[0::2].copy()
-    h2 = words[1::2] | np.uint64(1)
-    return h1, h2
+def _digests(sha1_hex: pa.ChunkedArray) -> np.ndarray:
+    """Each sha1 hex digest of an Arrow string column as its 20 raw bytes
+    (S20: lexicographic order == numeric digest order), decoded in one
+    C-speed pass over the column's value buffer — no per-row Python object."""
+    arr = sha1_hex.combine_chunks()
+    offsets = np.frombuffer(
+        arr.buffers()[1], np.int64 if pa.types.is_large_string(arr.type) else np.int32
+    )[arr.offset : arr.offset + len(arr) + 1]
+    if arr.null_count or (np.diff(offsets) != 40).any():
+        raise ValueError("url_sha1 must hold 40-char sha1 hex digests")
+    hexed = memoryview(arr.buffers()[2])[offsets[0] : offsets[-1]]
+    return np.frombuffer(bytes.fromhex(hexed.tobytes().decode("ascii")), dtype="S20")
 
 
-def _keys20(sha1_hex: pd.Series) -> np.ndarray:
-    """Full 20-byte digests as a fixed-width byte array (lexicographic order
-    == numeric digest order), one C-speed pass."""
-    joined = "".join(sha1_hex)
-    return np.frombuffer(bytes.fromhex(joined), dtype="S20")
+def _h1h2(keys: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """First two big-endian 64-bit words of each S20 digest."""
+    words = keys.view(np.uint8).reshape(-1, 20)[:, :16].copy().view(">u8")
+    return words[:, 0].astype(np.uint64), words[:, 1].astype(np.uint64) | np.uint64(1)
 
 
 def _bloom_params(
@@ -146,24 +148,56 @@ def _sorted_contains(sorted_keys: np.ndarray, keys: np.ndarray) -> np.ndarray:
     return (pos < len(sorted_keys)) & (np.asarray(sorted_keys[pos_c]) == keys)
 
 
+def _probe_segment(root: str, ent: dict, keys: np.ndarray, exact: bool) -> np.ndarray:
+    """Membership flags of the S20 ``keys`` in one segment (its manifest
+    entry ``ent``: a base and its runs). Not ``exact``: the OR of the
+    blooms. ``exact``: each bloom hit verified by binary search over the
+    mmap'd sorted keys of the file whose bloom passed it."""
+    h1, h2 = _h1h2(keys)
+    paths = [os.path.join(root, *rel.split("/")) for rel in [ent["base"], *ent["runs"]]]
+    maybes = []
+    for path in paths:
+        seg = np.load(path)
+        maybes.append(_bloom_test(seg["bitmap"], np.uint64(int(seg["m"])), int(seg["k"]), h1, h2))
+    maybe = np.logical_or.reduce(maybes)
+    if not exact:
+        return maybe
+    idx = np.flatnonzero(maybe)
+    hits = keys[idx]
+    found = np.zeros(len(idx), dtype=bool)
+    for path, file_maybe in zip(paths, maybes):
+        sel = file_maybe[idx] & ~found
+        if sel.any():
+            sorted_keys = np.load(SegmentStore._keys_name(path), mmap_mode="r")
+            found[sel] = _sorted_contains(sorted_keys, hits[sel])
+    seen = np.zeros(len(keys), dtype=bool)
+    seen[idx] = found
+    return seen
+
+
+def _one_row(**cols) -> pa.Table:
+    """One-row grouped-map result (Python ints arrive as Spark longs)."""
+    return pa.table({k: [v] for k, v in cols.items()})
+
+
 def _write_segment(
-    build_dir: str, name: str, sha1_hex: pd.Series, bits_per_key: int, n_hashes: int
+    build_dir: str, name: str, keys: np.ndarray, bits_per_key: int, n_hashes: int
 ) -> int:
-    """Write one segment file pair into ``build_dir``: a bloom sized for
-    ``sha1_hex`` as ``name`` (.npz) and the sorted digests beside it
+    """Write one segment file pair into ``build_dir``: a bloom sized for the
+    S20 digests ``keys`` as ``name`` (.npz) and the sorted digests beside it
     (.keys.npy), each saved under a task-unique tmp name and renamed into
     place. Returns the key count."""
-    n = len(sha1_hex)
+    n = len(keys)
     m, k = _bloom_params(n, bits_per_key, n_hashes)
     bitmap = np.zeros((m + 7) // 8, dtype=np.uint8)
-    _bloom_insert(bitmap, m, k, *_h1h2(sha1_hex))
+    _bloom_insert(bitmap, m, k, *_h1h2(keys))
     path = os.path.join(build_dir, name)
     kpath = os.path.join(build_dir, SegmentStore._keys_name(name))
     # tmp names keep the final suffix: np.savez/np.save append one otherwise
     tmp, ktmp = (f"{p[:-4]}.tmp{os.getpid()}{p[-4:]}" for p in (path, kpath))
     np.savez_compressed(tmp, bitmap=bitmap, m=np.int64(m), k=np.int64(k), n=np.int64(n))
     os.replace(tmp, path)
-    np.save(ktmp, np.sort(_keys20(sha1_hex)))
+    np.save(ktmp, np.sort(keys))
     os.replace(ktmp, kpath)
     return n
 
@@ -313,27 +347,26 @@ class SegmentStore:
             shutil.rmtree(final)  # replayed epoch: discard the old complete build
         os.rename(self._ver_dir(version, tmp=True), final)
 
-    def _with_sub(self, df: DataFrame, n_sub: dict[int, int]) -> DataFrame:
+    @staticmethod
+    def _with_sub(df: DataFrame, n_sub: dict[int, int]) -> DataFrame:
         """Append the sub-segment key. The Spark expression is the single
         source of truth (numpy side never re-derives it): hex chars 33-40 of
-        the sha1, mod the bucket's n_sub from a broadcast tiny dim."""
-        spark = df.sparkSession
-        rows = [(int(b), int(s)) for b, s in n_sub.items()]
-        if not rows:
+        the sha1, mod the bucket's n_sub; 0 for a bucket that is absent or
+        unsplit. Built as ONE SQL string with the split buckets' n_sub
+        inlined as a CASE — no dim DataFrame, so no Python job to build it
+        and no broadcast join; the steady store (no split bucket) gets a
+        literal 0."""
+        split = sorted((int(b), int(n)) for b, n in n_sub.items() if int(n) > 1)
+        if not split:
             return df.withColumn("_sub", F.lit(0))
-        dim = spark.createDataFrame(rows, "domain_hash int, _n_sub int")
-        out = df.join(F.broadcast(dim), "domain_hash", "left")
-        sub = (
-            F.when(F.col("_n_sub").isNull() | (F.col("_n_sub") <= 1), F.lit(0))
-            .otherwise(
-                F.pmod(
-                    F.conv(F.substring("url_sha1", 33, 8), 16, 10).cast("long"),
-                    F.col("_n_sub"),
-                )
-            )
-            .cast("int")
+        cases = " ".join(f"WHEN {b} THEN {n}" for b, n in split)
+        return df.withColumn(
+            "_sub",
+            F.expr(
+                "CAST(coalesce(pmod(CAST(conv(substr(url_sha1, 33, 8), 16, 10) AS BIGINT), "
+                f"CASE domain_hash {cases} END), 0) AS INT)"
+            ),
         )
-        return out.withColumn("_sub", sub).drop("_n_sub")
 
     def _bucket_counts(self, df: DataFrame) -> dict[int, int]:
         return {
@@ -377,17 +410,20 @@ class SegmentStore:
         bits_per_key, n_hashes = self.bits_per_key, self.n_hashes
         base_name = self._base_name
 
-        def build_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            bucket, sub = int(pdf["domain_hash"].iloc[0]), int(pdf["_sub"].iloc[0])
+        # grouped-map functions carry no type hints: applyInArrow would try to
+        # infer the UDF kind from them
+        def build_segment(key, table):
+            bucket, sub = key[0].as_py(), key[1].as_py()
             n = _write_segment(
-                build_dir, base_name(bucket, sub), pdf["url_sha1"], bits_per_key, n_hashes
+                build_dir, base_name(bucket, sub), _digests(table["url_sha1"]),
+                bits_per_key, n_hashes,
             )
-            return pd.DataFrame({"domain_hash": [bucket], "_sub": [sub], "n_keys": [n]})
+            return _one_row(domain_hash=bucket, _sub=sub, n_keys=n)
 
         rows = (
             self._with_sub(seen.select("url_sha1", "domain_hash"), n_sub)
             .groupBy("domain_hash", "_sub")
-            .applyInPandas(build_segment, schema="domain_hash int, _sub int, n_keys long")
+            .applyInArrow(build_segment, schema="domain_hash long, _sub long, n_keys long")
             .collect()
         )
         return [(int(r["domain_hash"]), int(r["_sub"]), int(r["n_keys"])) for r in rows]
@@ -441,18 +477,15 @@ class SegmentStore:
         # delta task reads only its own segment's entry
         bc_segments = spark.sparkContext.broadcast(prev_segments)
 
-        def delta_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            bucket, sub = int(pdf["domain_hash"].iloc[0]), int(pdf["_sub"].iloc[0])
+        def delta_segment(key, table):
+            bucket, sub = key[0].as_py(), key[1].as_py()
             ent = bc_segments.value.get(f"{bucket}_{sub}")
-            n_new = len(pdf)
+            n_new = table.num_rows
             if ent is not None:
                 # fold trigger from manifest counts alone — no file opens
                 n_total = int(ent["n_base"]) + sum(ent["run_ns"]) + n_new
                 if len(ent["runs"]) + 1 > max_runs or n_total > 2 * target_keys:
-                    return pd.DataFrame(
-                        {"domain_hash": [bucket], "n_new": [n_new],
-                         "rebuilt": [True], "_sub": [sub]}
-                    )
+                    return _one_row(domain_hash=bucket, n_new=n_new, rebuilt=True, _sub=sub)
             # brand-new segment: fresh base from the delta alone; otherwise
             # run index = len(prev runs): deterministic, so the driver
             # derives the same name for the manifest without a return trip
@@ -460,16 +493,16 @@ class SegmentStore:
                 base_name(bucket, sub) if ent is None
                 else run_name(bucket, sub, len(ent["runs"]))
             )
-            _write_segment(build_dir, name, pdf["url_sha1"], bits_per_key, n_hashes)
-            return pd.DataFrame(
-                {"domain_hash": [bucket], "n_new": [n_new], "rebuilt": [False], "_sub": [sub]}
+            _write_segment(
+                build_dir, name, _digests(table["url_sha1"]), bits_per_key, n_hashes
             )
+            return _one_row(domain_hash=bucket, n_new=n_new, rebuilt=False, _sub=sub)
 
         res = (
             self._with_sub(delta.select("url_sha1", "domain_hash"), eff_n_sub)
             .groupBy("domain_hash", "_sub")
-            .applyInPandas(
-                delta_segment, schema="domain_hash int, n_new long, rebuilt boolean, _sub int"
+            .applyInArrow(
+                delta_segment, schema="domain_hash long, n_new long, rebuilt boolean, _sub long"
             )
             .collect()
         )
@@ -527,18 +560,23 @@ class SegmentStore:
     # ---------- probe ----------
     def probe(self, candidates: DataFrame, version: int, exact: bool = False) -> DataFrame:
         """Membership probe, grouped by (domain_hash, sub) so each task reads
-        one bounded segment's files once.
+        one bounded segment's files once. Returns ``candidates`` — every
+        input column, as given — plus one flag column:
 
-        exact=True: adds ``seen`` — EXACT membership (bloom short-circuits
-        the misses; hits are verified against the mmap'd sorted key runs).
-        exact=False: adds ``bloom_maybe`` — the bloom pre-filter the exact
-        probe runs, on its own: False means DEFINITELY unseen (no false
+        exact=True: ``seen`` — EXACT membership (bloom short-circuits the
+        misses; hits are verified against the mmap'd sorted key runs).
+        exact=False: ``bloom_maybe`` — the bloom pre-filter the exact probe
+        runs, on its own: False means DEFINITELY unseen (no false
         negatives); True goes on to the binary search. Used to measure the
         pre-filter's false-positive rate.
+
+        The rows cross into Python as Arrow (``applyInArrow``): only
+        ``url_sha1`` is decoded to numpy, and the other columns go back as
+        the Arrow buffers they came in, never converted — so probing full
+        rows costs about what probing their keys would.
         """
         meta = self._meta(version)
         root = self.root
-        keys_name = self._keys_name
         out_col = "seen" if exact else "bloom_maybe"
         # run manifest rides a broadcast (once per executor): each probe task
         # resolves its segment's base + run file paths from it directly — no
@@ -546,52 +584,21 @@ class SegmentStore:
         # listdir-per-task design did O(segments²) metadata calls per epoch)
         bc_segments = candidates.sparkSession.sparkContext.broadcast(meta["segments"])
 
-        def probe_segment(pdf: pd.DataFrame) -> pd.DataFrame:
-            bucket, sub = int(pdf["domain_hash"].iloc[0]), int(pdf["_sub"].iloc[0])
+        def probe_segment(key, table):
+            bucket, sub = key[0].as_py(), key[1].as_py()
             ent = bc_segments.value.get(f"{bucket}_{sub}")
-            if ent is None:
-                pdf[out_col] = False
-                return pdf
-            base_path = os.path.join(root, *ent["base"].split("/"))
-            h1, h2 = _h1h2(pdf["url_sha1"])
-            seg = np.load(base_path)
-            base_maybe = _bloom_test(seg["bitmap"], np.uint64(int(seg["m"])), int(seg["k"]), h1, h2)
-            run_paths = [os.path.join(root, *r.split("/")) for r in ent["runs"]]
-            maybe = base_maybe.copy()
-            run_maybes = []
-            for p in run_paths:
-                r = np.load(p)
-                rm = _bloom_test(r["bitmap"], np.uint64(int(r["m"])), int(r["k"]), h1, h2)
-                run_maybes.append((p, rm))
-                maybe |= rm
-            if not exact:
-                pdf[out_col] = maybe
-                return pdf
-            seen = np.zeros(len(pdf), dtype=bool)
-            idx = np.flatnonzero(maybe)
-            if len(idx):
-                keys = _keys20(pdf["url_sha1"].iloc[idx])
-                base_keys = np.load(keys_name(base_path), mmap_mode="r")
-                found = np.where(base_maybe[idx], _sorted_contains(base_keys, keys), False)
-                for p, rm in run_maybes:
-                    sel = rm[idx] & ~found
-                    if sel.any():
-                        rkeys = np.load(keys_name(p), mmap_mode="r")
-                        found[sel] |= _sorted_contains(rkeys, keys[sel])
-                seen[idx] = found
-            pdf[out_col] = seen
-            return pdf
+            flag = np.zeros(table.num_rows, dtype=bool)
+            if ent is not None:
+                flag = _probe_segment(root, ent, _digests(table["url_sha1"]), exact)
+            return table.drop_columns(["_sub"]).append_column(out_col, pa.array(flag))
 
         from pyspark.sql import types as T
 
-        with_sub = self._with_sub(candidates, meta["n_sub"])
-        # StructType.add mutates in place — build a fresh copy
         schema = T.StructType(
-            list(with_sub.schema.fields) + [T.StructField(out_col, T.BooleanType())]
+            list(candidates.schema.fields) + [T.StructField(out_col, T.BooleanType())]
         )
         return (
-            with_sub.groupBy("domain_hash", "_sub")
-            .applyInPandas(probe_segment, schema=schema)
-            .drop("_sub")
+            self._with_sub(candidates, meta["n_sub"])
+            .groupBy("domain_hash", "_sub")
+            .applyInArrow(probe_segment, schema=schema)
         )
-

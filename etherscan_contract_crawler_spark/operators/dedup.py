@@ -10,9 +10,11 @@ so this module constructs the plan in that order by hand.
 Two plans, both exact:
 
 STORE PATH (the 10^10 path — no url_seen scan at all):
-  candidates --(grouped probe: bloom short-circuit + binary search over
-               mmap'd sorted key runs)--> seen: boolean (EXACT)
-  unseen = filter(~seen). The url_seen TABLE is never joined — the per-epoch
+  candidates --(grouped Arrow probe of the full rows: bloom short-circuit +
+               binary search over mmap'd sorted key runs)--> rows + seen
+  unseen = filter(~seen), one pass: the probe returns the candidate rows
+  themselves, so there is no key list to anti-join back onto them and the
+  candidates' plan runs once. The url_seen TABLE is never joined — the per-epoch
   dedup cost is O(candidates × log(segment)), not O(total seen). This is
   what kills the last O(total)-per-epoch stage in the engine: a Spark
   anti-join must scan/build over the whole seen side every epoch no matter
@@ -45,23 +47,14 @@ def unseen_with_bloom(
     version: int | None,
 ) -> DataFrame:
     """Store-accelerated J1: probes published store ``version`` (the caller
-    has checked it is current); the exact join when there is no store."""
+    has checked it is current); the exact join when there is no store.
+
+    The store path probes the candidate rows as given and keeps those the
+    exact probe marks unseen: one pass, no anti-join, and the candidates'
+    plan (e.g. the engine's frontier dedup agg) is evaluated once."""
     if store is None or version is None:
         return anti_join_seen(candidates, seen)
-    cols = candidates.columns  # the USING join moves the key column first
-    # probe a 2-column PROJECTION, not the full rows: the probe's cost is
-    # dominated by the Arrow round trip into Python (measured ~0.3 ms/row
-    # single-core for 10-column frontier rows), and only the key columns
-    # participate. The discovered seen-keys set is bounded by the
-    # CANDIDATE count — so the anti-join that re-applies it to the full
-    # rows never touches the url_seen table and stays independent of
-    # total-seen size (AQE broadcasts it when small).
-    seen_keys = (
-        store.probe(candidates.select("url_sha1", "domain_hash"), version, exact=True)
-        .filter(F.col("seen"))
-        .select("url_sha1")
-    )
-    return candidates.join(seen_keys, "url_sha1", "left_anti").select(cols)
+    return store.probe(candidates, version, exact=True).filter(~F.col("seen")).drop("seen")
 
 
 def url_alias_groups(

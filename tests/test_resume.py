@@ -194,3 +194,58 @@ def test_double_crash_same_epoch_replay_is_idempotent(spark, tiny_seeds_df, tmp_
     assert total == images_after_partials
     scheduled.unpersist()
     part1.unpersist()
+
+
+@pytest.mark.slow
+def test_crash_after_dead_letter_append_replays_to_same_state(
+    spark, tiny_seeds_df, tmp_path, monkeypatch
+):
+    """Crash in the commit wave AFTER the dead-letter append landed and
+    before url_seen's commit (the epoch-completion marker). The replayed
+    epoch re-fails the same keys; its dead-letter append must skip what the
+    crashed attempt landed (this epoch's stamped dirs), and expansion must
+    still discover each child once. Dead letters and frontier must equal an
+    uncrashed run's, key-unique."""
+    from etherscan_contract_crawler_spark.storage.icetable import SnapshotTable
+
+    kw = dict(epoch_duration_s=10, batch_size=120, expand_links=True)
+    crash_epoch, last_epoch = 2, 3  # epoch 2 has a hard-failed fetch
+
+    ref = _engine(spark, tmp_path, "ref", **kw)
+    ref.bootstrap(tiny_seeds_df)
+    for e in range(last_epoch + 1):
+        ref.run_epoch(e)
+
+    eng = _engine(spark, tmp_path, "crash", **kw)
+    eng.bootstrap(tiny_seeds_df)
+    for e in range(crash_epoch):
+        eng.run_epoch(e)
+    commit_append = SnapshotTable.commit_append
+    armed = [True]
+
+    def crash_once(self, sid, d, lineage=None):
+        if armed[0] and self.path == eng.url_seen.path:
+            armed[0] = False
+            raise RuntimeError("injected crash before the url_seen commit")
+        return commit_append(self, sid, d, lineage)
+
+    monkeypatch.setattr(SnapshotTable, "commit_append", crash_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        eng.run_epoch(crash_epoch)
+    dead = eng.dead_letter.manifest()
+    assert crash_epoch in dead["dir_epochs"].values(), "setup: dead letters landed"
+    assert eng.last_completed_epoch() == crash_epoch - 1
+
+    eng2 = _engine(spark, tmp_path, "crash", **kw)
+    for e in range(crash_epoch, last_epoch + 1):
+        eng2.run_epoch(e)
+
+    for t in ("dead_letter", "frontier", "url_seen"):
+        got = [tuple(r) for r in getattr(eng2, t).read(spark).collect()]
+        want = [tuple(r) for r in getattr(ref, t).read(spark).collect()]
+        assert sorted(got) == sorted(want), t
+        keys = [r["url_sha1"] for r in getattr(eng2, t).read(spark).collect()]
+        assert len(keys) == len(set(keys)), f"{t} not key-unique"
+    n_dead = {r["failed_epoch"]: r["n"] for r in
+              eng2.dead_letter.read(spark).groupBy("failed_epoch").agg(F.count("*").alias("n")).collect()}
+    assert n_dead.get(crash_epoch, 0) > 0
